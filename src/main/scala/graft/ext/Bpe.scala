@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.DriverTier
 import graft.sources.Tables
 
 /** Byte-pair-encoding tokenizer induction and application — the vocab-
@@ -91,24 +92,6 @@ object Bpe {
   private def toSymbols(word: org.apache.spark.sql.Column) =
     concat(filter(split(word, ""), x => length(x) > 0), array(lit("</w>")))
 
-  /** Unsigned UTF-8 byte comparison — EXACTLY Spark's string ordering
-    * (UTF8String.binaryCompare). The local merge loop's tie-break must
-    * reproduce the distributed `orderBy(cnt DESC, a, b)` bit-for-bit,
-    * and Java String.compareTo orders by UTF-16 code unit, which
-    * diverges from UTF-8 byte order for supplementary code points. */
-  private[graft] def utf8Compare(x: String, y: String): Int = {
-    val a = x.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val b = y.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val n = math.min(a.length, b.length)
-    var i = 0
-    while (i < n) {
-      val c = (a(i) & 0xff) - (b(i) & 0xff)
-      if (c != 0) return c
-      i += 1
-    }
-    a.length - b.length
-  }
-
   /** LOCAL merge loop over a collected word-frequency table — the r19
     * fast path of [[trainWithVocab]]. BPE's decision state is the
     * Heaps-law-bounded vocabulary, not the corpus (the original
@@ -125,13 +108,15 @@ object Bpe {
     *
     * Bit-identical contract with the distributed loop, proven by
     * BpeSpec's equivalence golden: counts are exact Longs summed in
-    * any order; argmax tie-break is (count DESC, left, right) with
-    * [[utf8Compare]] = Spark's string order; the rewrite is the same
-    * [[mergeOnce]] kernel; minCount exhaustion matches. */
+    * any order; argmax tie-break is (count DESC, left, right) in
+    * Spark's string order (UTF-8 bytes, not Java's UTF-16 compareTo,
+    * which diverges for supplementary code points); the rewrite is the
+    * same [[mergeOnce]] kernel; minCount exhaustion matches. */
   private[graft] def trainLocalLoop(
       vocab0: Array[(Array[String], Long)], nMerges: Int, minCount: Long):
       (Seq[(Int, String, String, String, Long)], Array[(Array[String], Long)]) = {
     import scala.collection.mutable
+    val cmp = DriverTier.sparkOrder(org.apache.spark.sql.types.StringType).get
     var cur = vocab0
     val counts = mutable.HashMap.empty[(String, String), Long]
     def addWord(syms: Array[String], f: Long, sign: Long): Unit = {
@@ -151,8 +136,8 @@ object Bpe {
       var ba: String = null; var bb: String = null; var bc = Long.MinValue
       counts.foreach { case ((a, b), c) =>
         if (c > bc || (c == bc && {
-          val ca = utf8Compare(a, ba)
-          ca < 0 || (ca == 0 && utf8Compare(b, bb) < 0)
+          val ca = cmp(a, ba)
+          ca < 0 || (ca == 0 && cmp(b, bb) < 0)
         })) { ba = a; bb = b; bc = c }
       }
       if (ba == null || bc < minCount) exhausted = true
@@ -179,18 +164,6 @@ object Bpe {
     }
     (merges.toSeq, cur)
   }
-
-  /** Vocabulary-row cap under which [[trainWithVocab]] collects the
-    * word-frequency table and runs the merge loop on the driver. A
-    * 1 M-row vocab is ~tens of MB — the documented bounded-collect
-    * class (the LM model build, the PQ sample); past the cap the
-    * distributed loop runs unchanged (the 100 TB posture: Heaps-law
-    * vocabularies ≈ 10⁷ rows stay on the cluster unless the operator
-    * is explicitly told the driver can hold them). */
-  private[graft] def localVocabCap: Long =
-    sys.props.get("graft.bpe.localCap")
-      .orElse(sys.env.get("SPARK_GRAFT_BPE_LOCAL_CAP"))
-      .map(_.toLong).getOrElse(1000000L)
 
   /** Train `nMerges` BPE merges over `textCol`. Returns the merge
     * table: (rank, left, right, merged, pair_count), rank 1 = first
@@ -227,15 +200,15 @@ object Bpe {
       .select(toSymbols(col("word")).as("syms"), col("freq"))
       .persist()
     val nVocab = vocab.count()
-    // r19 fast path: the merge rounds are a SEQUENTIAL chain of argmax
-    // decisions over the vocabulary — when that bounded frame fits the
-    // driver (localVocabCap), 40 cluster round-trips buy nothing. One
-    // collect, the identical loop locally, results bit-equal by
-    // BpeSpec's equivalence golden. The corpus-sized word count above
-    // stays distributed either way.
-    if (nVocab <= localVocabCap) {
-      val rows = vocab.collect().map(r =>
-        (r.getSeq[String](0).toArray, r.getLong(1)))
+    // Driver tier (DriverTier.Vocabulary): the merge rounds are a
+    // SEQUENTIAL chain of argmax decisions over the vocabulary — when
+    // that bounded frame fits the driver, 40 cluster round-trips buy
+    // nothing. One collect, the identical loop locally, results
+    // bit-equal by BpeSpec's equivalence golden. The corpus-sized word
+    // count above stays distributed either way. Past the cap the
+    // distributed loop below runs unchanged.
+    for (collected <- DriverTier.collectIfBounded(vocab, nVocab, DriverTier.Vocabulary)) {
+      val rows = collected.map(r => (r.getSeq[String](0).toArray, r.getLong(1)))
       vocab.unpersist()
       val (merges, finalVocab) = trainLocalLoop(rows, nMerges, minCount)
       val mergesDf = merges.toDF("rank", "left", "right", "merged", "pair_count")

@@ -366,22 +366,19 @@ object NearDup {
 
   /** Connected components over the similar-pair graph: every doc gets a
     * group_id = min doc id reachable from it. Docs with no near-dup are
-    * their own group. Iterative min-label propagation, bounded by
-    * `maxIter`, early-stops on convergence.
+    * their own group. The components are
+    * [[graft.operators.Graph.connectedComponents]] over the verified
+    * pairs — its driver tier when the pair set is bounded, its
+    * propagation loop (at most `maxIter` rounds, failing fast when the
+    * graph is deeper) otherwise.
     *
-    * Cache discipline (r4 VERDICT findings 3 + ADVICE lineage item):
-    * each iteration's changed-count is a FULL count over the filtered
-    * frame, so the persisted `next` is completely materialized before
-    * its parent is unpersisted — later stages never recompute through an
-    * unpersisted lineage chain (the old `limit(1).count()` short-circuit
-    * materialized only the first changed partition). The endpoint label
-    * frame is `localCheckpoint`ed: its lineage (the whole LSH+CC DAG
-    * through now-released caches) is truncated to the materialized
-    * blocks, so every intermediate persist is released HERE instead of
-    * leaking until GC — the returned plan holds only the tiny
-    * checkpointed frame plus a re-computable doc scan. A production
-    * deployment would `write` the labels to a table instead (reliable
-    * storage); localCheckpoint is the single-session analog. */
+    * Only pair ENDPOINTS go through the components: a doc with no
+    * verified near-dup edge can never change label, so non-endpoints
+    * rejoin as identity groups at the end. The endpoint label frame is
+    * a LocalRelation or a localCheckpointed frame, so every LSH cache
+    * is released HERE; the returned plan holds only that tiny frame
+    * plus a re-computable doc scan. A production deployment would
+    * `write` the labels to a table instead (reliable storage). */
   def nearDupGroups(
       docs: DataFrame,
       idCol: String = "doc_id",
@@ -394,86 +391,12 @@ object NearDup {
     val hashed = hashedShingles(docs, idCol, textCol, shingleN).persist()
     val pairs = similarPairsFrom(hashed, numPerm, bands, threshold, maxBucket = 10000)
       .select("a", "b").persist()
-    // adjacency both directions (self-loops implicit via the left join)
-    val adj = pairs.union(pairs.select(col("b").as("a"), col("a").as("b"))).persist()
-    val nAdj = adj.count() // materialize; drops the LSH lineage from the loop below
-    hashed.unpersist() // pairs/adj are cached; the shingle frame is done
-
-    // r19 fast path (Graph.ccLocalCap doctrine): the VERIFIED pair set
-    // is the bounded decision state — the corpus-sized work (shingling,
-    // banding, Jaccard verification) is already behind us — so when it
-    // fits the driver, one union-find pass replaces the propagation
-    // rounds (each of which was a join+agg+count job train; the
-    // Bpe-local-loop class of win). Endpoint labels come back as a
-    // LocalRelation, which the widening join below broadcasts for free.
-    // Identical labels: component = min reachable id under Spark's own
-    // ordering (NearDupSpec local≡distributed golden).
-    val idDt = adj.schema("a").dataType
-    val localLt = graft.operators.Graph.ccLocalLt(idDt)
-    if (nAdj <= graft.operators.Graph.ccLocalCap && localLt.isDefined) {
-      val rows = adj.collect()
-      if (!rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
-        pairs.unpersist(); adj.unpersist()
-        val lbl = graft.operators.Graph.unionFindMin(
-          rows.map(r => (r.get(0), r.get(1))), localLt.get)
-        val spark = docs.sparkSession
-        val endpointLabels = spark.createDataFrame(
-          java.util.Arrays.asList(lbl.map { case (v, m) =>
-            org.apache.spark.sql.Row(v, m) }: _*),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("id", idDt),
-            org.apache.spark.sql.types.StructField("label", idDt))))
-        return docs.select(col(idCol).as("id"))
-          .join(endpointLabels, Seq("id"), "left")
-          .select(col("id").as(idCol),
-            coalesce(col("label"), col("id")).as("group_id"))
-      }
-    }
-
-    // The loop's working set is the pair-graph ENDPOINTS only — a doc
-    // with no verified near-dup edge can never change label, so carrying
-    // the whole corpus through every iteration (as r1–r4 did) shuffles
-    // O(corpus) per step for nothing; endpoints are O(pairs), the set
-    // that actually propagates. Non-endpoints rejoin as identity groups
-    // at the end.
-    // `cached` is the persisted handle (unpersist must target the exact
-    // cached plan); `labels` is the (id, label) view read by the loop.
-    var cached = adj.select(col("a").as("id")).distinct()
-      .select(col("id"), col("id").as("label")).persist()
-    var labels = cached
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      // label'(v) = min(label(v), min over neighbors u of label(u));
-      // carry the previous label so convergence needs no second join
-      val nbrMin = adj.join(labels, adj("b") === labels("id"))
-        .groupBy(adj("a").as("id2")).agg(min("label").as("nbr_label"))
-      val next = labels.join(nbrMin, labels("id") === nbrMin("id2"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"),
-          col("label").as("prev"))
-        .persist()
-      // FULL count: materializes every partition of `next` before the
-      // parent cache is dropped (see scaladoc).
-      val changed = next.filter(col("label") =!= col("prev")).count()
-      cached.unpersist()
-      cached = next
-      labels = next.drop("prev")
-      converged = changed == 0
-      iter += 1
-    }
-    pairs.unpersist(); adj.unpersist()
-    // Pin the endpoint labels (O(pairs) rows, not O(corpus)), release
-    // the last loop cache, then widen back to every doc: non-endpoints
-    // are their own group. The widening join's build side is the tiny
-    // checkpointed frame; the probe side is the plain doc scan —
-    // re-computable lineage, nothing left persisted.
-    val endpointLabels = labels.localCheckpoint(true)
-    cached.unpersist()
+    val labels = graft.operators.Graph.connectedComponents(pairs, maxIter)
+    pairs.unpersist(); hashed.unpersist()
     docs.select(col(idCol).as("id"))
-      .join(endpointLabels, Seq("id"), "left")
+      .join(labels, Seq("id"), "left")
       .select(col("id").as(idCol),
-        coalesce(col("label"), col("id")).as("group_id"))
+        coalesce(col("component"), col("id")).as("group_id"))
   }
 
   /** Dedup: keep one representative (the min-id doc) per near-dup group. */

@@ -679,11 +679,12 @@ object Similarity {
     // plan: N·maxU and N·maxU² must both clear Long.Max with 2×
     // headroom, and null elements (whose sum/count semantics differ
     // from long 0) fall back. Unit-scale embeddings clear the bound to
-    // ~10⁶ vectors per 64-dim corpus; past it — or for null-bearing
-    // rows — the decimal join form below runs unchanged (measured
-    // sf0.1: fast 1.5-2.0 s vs decimal 4.0-4.3 s; an interpreted-HOF
-    // pair generator was tried first and measured 10.5 s — the
-    // CodegenFallback trap shingleHashesKernel documents).
+    // ~10⁶ vectors per 64-dim corpus; past it — for null-bearing rows,
+    // or inside DriverTier.withFallback — the decimal join form below
+    // runs unchanged (measured sf0.1: fast 1.5-2.0 s vs decimal
+    // 4.0-4.3 s; an interpreted-HOF pair generator was tried first and
+    // measured 10.5 s — the CodegenFallback trap shingleHashesKernel
+    // documents).
     val qArr = transform(col("embedding"),
       e => e.cast("double").cast("decimal(12,6)"))
     val uArr = transform(qArr, q => (q * lit(1000000)).cast("long"))
@@ -697,7 +698,7 @@ object Similarity {
     val safe = n0 > 0 && !hasNulls && maxU > 0 &&
       maxU <= Long.MaxValue / 2 / math.max(n0, 1L) / math.max(maxU, 1L) &&
       n0 <= Long.MaxValue / 2 / math.max(maxU, 1L) &&
-      !sys.props.contains("graft.cov.forceDecimal") // test hook: SimilaritySpec pins fast ≡ decimal
+      !graft.core.DriverTier.fallbackForced
     if (safe) {
       val gen = udf { (q: Seq[Long]) =>
         if (q == null) Array.empty[(Int, Int, Long, Long)] // null array ≡ no pairs (posexplode parity)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.DriverTier
 import graft.sources.Tables
 
 /** Graph operators — iterative DataFrame algorithms under the oracle
@@ -42,46 +43,11 @@ import graft.sources.Tables
   */
 object Graph {
 
-  /** Edge-row cap under which the CC family collects the (bounded,
-    * verified) edge list and resolves components in ONE driver-side
-    * union-find pass instead of driver-coordinated propagation /
-    * contraction rounds — the r19 Bpe.localVocabCap doctrine: the
-    * DECISION state is the edge set, which the builders already bound
-    * (LSH bucket guards, fuzzy-pair banding, dense-cell adjacency),
-    * while the corpus-sized work (shingling, verification, cell aggs)
-    * stays distributed. 4 M edge rows of two longs ≈ 64 MB — the
-    * documented bounded-collect class. Past the cap, or for id types
-    * without a mirrored local ordering, the distributed loops run
-    * unchanged. Output contract is IDENTICAL (component = min
-    * reachable id under Spark's own ordering); equivalence is pinned
-    * by EntityAnalyticsSpec's local≡distributed golden. */
-  private[graft] def ccLocalCap: Long =
-    sys.props.get("graft.cc.localCap")
-      .orElse(sys.env.get("SPARK_GRAFT_CC_LOCAL_CAP"))
-      .map(_.toLong).getOrElse(4000000L)
-
-  /** Spark-order `lessThan` for the id types the local CC path serves;
-    * None = keep the distributed loop. String order is UTF-8 byte
-    * order (Bpe.utf8Compare) = UTF8String.binaryCompare, NOT Java's
-    * UTF-16 compareTo. */
-  private[graft] def ccLocalLt(
-      dt: org.apache.spark.sql.types.DataType): Option[(Any, Any) => Boolean] =
-    dt match {
-      case org.apache.spark.sql.types.LongType =>
-        Some((a, b) => a.asInstanceOf[Long] < b.asInstanceOf[Long])
-      case org.apache.spark.sql.types.IntegerType =>
-        Some((a, b) => a.asInstanceOf[Int] < b.asInstanceOf[Int])
-      case org.apache.spark.sql.types.StringType =>
-        Some((a, b) => graft.ext.Bpe.utf8Compare(
-          a.asInstanceOf[String], b.asInstanceOf[String]) < 0)
-      case _ => None
-    }
-
   /** Union-find (path-halving + union by rank) over a collected edge
-    * list; maps every endpoint to the MINIMUM reachable id under `lt`
+    * list; maps every endpoint to the MINIMUM reachable id under `cmp`
     * — exactly the distributed propagation/contraction fixpoint. */
-  private[graft] def unionFindMin(pairs: Array[(Any, Any)],
-      lt: (Any, Any) => Boolean): Array[(Any, Any)] = {
+  private def unionFindMin(pairs: Array[(Any, Any)],
+      cmp: (Any, Any) => Int): Array[(Any, Any)] = {
     import scala.collection.mutable
     val index = mutable.HashMap.empty[Any, Int]
     val vals = mutable.ArrayBuffer.empty[Any]
@@ -107,24 +73,20 @@ object Graph {
     while (i < vals.length) {
       val r = find(i); val v = vals(i)
       val m = minOf.get(r)
-      if (m.isEmpty || lt(v, m.get)) minOf(r) = v
+      if (m.isEmpty || cmp(v, m.get) < 0) minOf(r) = v
       i += 1
     }
     Array.tabulate(vals.length)(k => (vals(k), minOf(find(k))))
   }
 
-  /** Two-column LocalRelation (id-typed) from a driver-side label map —
-    * the local CC paths' return shape. A LocalRelation build side lets
-    * downstream joins broadcast it without an exchange. */
-  private def ccLabelFrame(spark: SparkSession,
-      dt: org.apache.spark.sql.types.DataType, names: (String, String),
+  /** (id, component) LocalRelation from a driver-side label map. */
+  private def labelFrame(spark: SparkSession,
+      dt: org.apache.spark.sql.types.DataType,
       labels: Array[(Any, Any)]): DataFrame = {
     import org.apache.spark.sql.types.{StructField, StructType}
-    val schema = StructType(Seq(
-      StructField(names._1, dt), StructField(names._2, dt)))
-    spark.createDataFrame(
-      java.util.Arrays.asList(labels.map { case (v, m) =>
-        org.apache.spark.sql.Row(v, m) }: _*), schema)
+    DriverTier.localFrame(spark,
+      StructType(Seq(StructField("id", dt), StructField("component", dt))),
+      labels.toSeq.map { case (v, m) => org.apache.spark.sql.Row(v, m) })
   }
 
   /** Connected components over an undirected edge frame.
@@ -144,19 +106,17 @@ object Graph {
     val adjWide = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
       .distinct().persist()
     val nEdges = adjWide.count() // materialize; iterations must not recompute
-    // r19 fast path (ccLocalCap scaladoc): a bounded edge set resolves
-    // by one driver-side union-find pass — no propagation rounds, no
-    // round-budget concern (union-find is exact at any diameter). Null
-    // endpoints keep the distributed loop (they never join there).
-    val localLt = ccLocalLt(e.schema("src").dataType)
-    if (nEdges <= ccLocalCap && localLt.isDefined) {
-      val rows = adjWide.collect()
-      if (!rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
-        adjWide.unpersist()
-        val lbl = unionFindMin(rows.map(r => (r.get(0), r.get(1))), localLt.get)
-        return ccLabelFrame(edges.sparkSession, e.schema("src").dataType,
-          ("id", "component"), lbl)
-      }
+    // Driver tier (DriverTier.Edges): the edge set is the bounded
+    // decision state, so one driver-side union-find pass replaces the
+    // propagation rounds — exact at any diameter, so no round budget.
+    // Null endpoints keep the distributed loop (they never join there).
+    val dt = e.schema("src").dataType
+    for (cmp <- DriverTier.sparkOrder(dt);
+         rows <- DriverTier.collectIfBounded(adjWide, nEdges, DriverTier.Edges)
+         if !rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
+      adjWide.unpersist()
+      return labelFrame(edges.sparkSession, dt,
+        unionFindMin(rows.map(r => (r.get(0), r.get(1))), cmp))
     }
     // Pre-partition the LOOP-INVARIANT adjacency by its join key, sized
     // ~100k edge rows/partition (capped at the session parallelism):
@@ -250,29 +210,31 @@ object Graph {
     * lineage); keep propagation for known-shallow similarity graphs
     * (its per-round cost is lower and shallow graphs finish in 2–4). */
   def connectedComponentsStar(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    // r19 fast path (ccLocalCap scaladoc): resolve a bounded canonical
-    // edge set with one driver union-find pass. The canonical frame is
-    // built ONCE (checkpointed) and handed to the distributed loop
-    // when over the cap, so the >cap case pays no extra shuffle.
-    // ccStarWithRounds stays the raw distributed engine (its round
-    // counts are pinned by tests and the ScaleBench cc curve).
+    // Driver tier (DriverTier.Edges): resolve a bounded canonical edge
+    // set with one union-find pass. The canonical frame is built ONCE
+    // (checkpointed) and handed to the distributed loop when over the
+    // cap, so that case pays no extra shuffle. ccStarWithRounds stays
+    // the raw distributed engine (its round counts are pinned by tests
+    // and the ScaleBench cc curve).
     val Seq(srcCol, dstCol) = edges.columns.toSeq.take(2)
-    val localLt = ccLocalLt(edges.schema(srcCol).dataType)
-    if (localLt.isEmpty) return ccStarWithRounds(edges, maxIter)._1
+    val dt = edges.schema(srcCol).dataType
+    val cmp = DriverTier.sparkOrder(dt) match {
+      case Some(c) => c
+      case None => return ccStarWithRounds(edges, maxIter)._1
+    }
     val canon = ccCanonEdges(edges, srcCol, dstCol)
-    if (canon.count() <= ccLocalCap) {
-      // canonicalization already dropped null-involved and self-loop
-      // rows; self-loop-only / isolated endpoints rejoin as singletons
-      // from the node set, exactly like the distributed tail
-      val uf = unionFindMin(
-        canon.collect().map(r => (r.get(0), r.get(1))), localLt.get).toMap
-      val nodes = edges.select(col(srcCol).as("id"))
-        .union(edges.select(col(dstCol).as("id"))).distinct().collect()
-      val lbl = nodes.map { r =>
-        val v = r.get(0); (v, uf.getOrElse(v, v)) }
-      ccLabelFrame(edges.sparkSession, edges.schema(srcCol).dataType,
-        ("id", "component"), lbl)
-    } else ccStarLoop(canon, edges, srcCol, dstCol, maxIter)._1
+    DriverTier.collectIfBounded(canon, canon.count(), DriverTier.Edges) match {
+      case Some(rows) =>
+        // canonicalization already dropped null-involved and self-loop
+        // rows; self-loop-only / isolated endpoints rejoin as singletons
+        // from the node set, exactly like the distributed tail
+        val uf = unionFindMin(rows.map(r => (r.get(0), r.get(1))), cmp).toMap
+        val nodes = edges.select(col(srcCol).as("id"))
+          .union(edges.select(col(dstCol).as("id"))).distinct().collect()
+        labelFrame(edges.sparkSession, dt, nodes.map { r =>
+          val v = r.get(0); (v, uf.getOrElse(v, v)) })
+      case None => ccStarLoop(canon, edges, srcCol, dstCol, maxIter)._1
+    }
   }
 
   /** Canonical (hi > lo) distinct edge frame, checkpointed — the star
@@ -444,55 +406,47 @@ object Graph {
     val adjWide = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
       .distinct().persist()
     val nEdges = adjWide.count()
-    // r19 fast path (ccLocalCap doctrine): the power method's state is
-    // the symmetrized adjacency + one rank per node — when the edge
-    // set fits the driver, 10 rounds of join+agg job trains buy
-    // nothing. Same update expression per node:
-    // (1−d)/n + d·Σ rank(u)/deg(u). Float-sum ORDER is fixed here
-    // (edges sorted by (src, dst)) where the distributed rounds sum in
-    // partition order — PageRank is declared rows-only for exactly
-    // that reason (cross-engine/cross-partitioning float order), the
-    // q273 invariant gate is order-free, and EntityAnalyticsSpec pins
-    // the 1e-9 reference-iteration contract on BOTH paths. Null
-    // endpoints or exotic id types keep the distributed loop.
-    val localLt = ccLocalLt(e.schema("src").dataType)
-    if (nEdges <= ccLocalCap && nEdges > 0 && localLt.isDefined) {
-      val rows = adjWide.collect()
-      if (!rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
-        adjWide.unpersist()
-        val lt = localLt.get
-        val arr = rows.map(r => (r.get(0), r.get(1)))
-          .sortWith((a, b) => lt(a._1, b._1) ||
-            (!lt(b._1, a._1) && lt(a._2, b._2)))
-        val ids = arr.map(_._1).distinct // first-seen = sorted order
-        val idx = ids.zipWithIndex.toMap
-        val n = ids.length
-        val deg = new Array[Long](n)
-        arr.foreach { case (u, _) => deg(idx(u)) += 1L }
-        val src = arr.map(x => idx(x._1))
-        val dst = arr.map(x => idx(x._2))
-        var rank = Array.fill(n)(1.0 / n)
-        val base = (1.0 - damping) / n
-        (1 to iterations).foreach { _ =>
-          val recv = new Array[Double](n)
-          var i = 0
-          while (i < arr.length) {
-            recv(dst(i)) += rank(src(i)) / deg(src(i))
-            i += 1
-          }
-          rank = recv.map(r => base + damping * r)
+    // Driver tier (DriverTier.Edges): the power method's state is the
+    // symmetrized adjacency + one rank per node — when the edge set
+    // fits the driver, 10 rounds of join+agg job trains buy nothing.
+    // Same update expression per node: (1−d)/n + d·Σ rank(u)/deg(u).
+    // Float-sum ORDER is fixed here (edges sorted by (src, dst)) where
+    // the distributed rounds sum in partition order — PageRank is
+    // declared rows-only for exactly that reason (cross-engine/cross-
+    // partitioning float order), the q273 invariant gate is order-free,
+    // and EntityAnalyticsSpec pins the 1e-9 reference-iteration contract
+    // on BOTH paths. Null endpoints or exotic id types keep the
+    // distributed loop.
+    val dt = e.schema("src").dataType
+    for (cmp <- DriverTier.sparkOrder(dt) if nEdges > 0;
+         rows <- DriverTier.collectIfBounded(adjWide, nEdges, DriverTier.Edges)
+         if !rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
+      adjWide.unpersist()
+      val arr = rows.map(r => (r.get(0), r.get(1))).sortWith { (a, b) =>
+        val c = cmp(a._1, b._1); c < 0 || (c == 0 && cmp(a._2, b._2) < 0) }
+      val ids = arr.map(_._1).distinct // first-seen = sorted order
+      val idx = ids.zipWithIndex.toMap
+      val n = ids.length
+      val deg = new Array[Long](n)
+      arr.foreach { case (u, _) => deg(idx(u)) += 1L }
+      val src = arr.map(x => idx(x._1))
+      val dst = arr.map(x => idx(x._2))
+      var rank = Array.fill(n)(1.0 / n)
+      val base = (1.0 - damping) / n
+      (1 to iterations).foreach { _ =>
+        val recv = new Array[Double](n)
+        var i = 0
+        while (i < arr.length) {
+          recv(dst(i)) += rank(src(i)) / deg(src(i))
+          i += 1
         }
-        import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-        val schema = StructType(Seq(
-          StructField("id", e.schema("src").dataType),
-          StructField("rank", DoubleType, nullable = false)))
-        return edges.sparkSession.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](
-            scala.jdk.CollectionConverters.SeqHasAsJava(
-              ids.indices.map(i =>
-                org.apache.spark.sql.Row(ids(i), rank(i))).toSeq).asJava),
-          schema)
+        rank = recv.map(r => base + damping * r)
       }
+      import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+      return DriverTier.localFrame(edges.sparkSession,
+        StructType(Seq(StructField("id", dt),
+          StructField("rank", DoubleType, nullable = false))),
+        ids.indices.map(i => org.apache.spark.sql.Row(ids(i), rank(i))))
     }
     val loopParts = math.max(1, math.min(
       edges.sparkSession.sessionState.conf.numShufflePartitions,
@@ -670,18 +624,17 @@ object Graph {
       spark.sparkContext.defaultParallelism))
     var alive = sym.repartition(loopParts, col("src")).persist()
     val nSym = alive.count()
-    // r19 fast path (ccLocalCap doctrine): the k-core is the UNIQUE
-    // maximal subgraph of min-degree ≥ k — peel order does not change
-    // the fixpoint — so a bounded symmetric edge list resolves with one
+    // Driver tier (DriverTier.Edges): the k-core is the UNIQUE maximal
+    // subgraph of min-degree ≥ k — peel order does not change the
+    // fixpoint — so a bounded symmetric edge list resolves with one
     // driver-side queue peel instead of maxIter wave jobs (15 waves at
     // sf0.1 = 15 agg+collect+filter trains). Multiplicity semantics
     // match the distributed form exactly: degree = symmetric edge ROWS
     // per src, each removed occurrence decrements its mirror's count.
     // Any id type works (no ordering needed). Past the cap the wave
     // loop below runs unchanged.
-    if (nSym <= ccLocalCap) {
+    for (rows <- DriverTier.collectIfBounded(alive, nSym, DriverTier.Edges)) {
       import scala.collection.mutable
-      val rows = alive.collect()
       alive.unpersist()
       val deg = mutable.HashMap.empty[Any, Long]
       val adj = mutable.HashMap.empty[Any, mutable.ArrayBuffer[Any]]
@@ -706,16 +659,12 @@ object Graph {
           }
         }
       }
-      val survivors = deg.iterator
-        .filter { case (v, dv) => !removed.contains(v) && dv > 0L }
-        .map { case (v, dv) => (v, dv) }.toArray
       import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      val schema = StructType(Seq(
-        StructField("node", e0.schema("src").dataType),
-        StructField("core_deg", LongType, nullable = false)))
-      return spark.createDataFrame(
-        java.util.Arrays.asList(survivors.map { case (v, dv) =>
-          org.apache.spark.sql.Row(v, dv) }: _*), schema)
+      return DriverTier.localFrame(spark,
+        StructType(Seq(StructField("node", e0.schema("src").dataType),
+          StructField("core_deg", LongType, nullable = false))),
+        deg.iterator.filter { case (v, dv) => !removed.contains(v) && dv > 0L }
+          .map { case (v, dv) => org.apache.spark.sql.Row(v, dv) }.toSeq)
     }
     var round = 0
     var done = false

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.core.DriverTier
 import graft.sources.Tables
 
 /** The declared relational query surface (SURVEY.md §2.3, Q1–Q24).
@@ -1680,12 +1681,13 @@ object Relational {
     * single-Long key packing below: (_1 = every item in [0, 2³¹),
     * _2 = additionally every cust in [0, 2³¹)). Non-Long columns fail
     * their half — the operators admit any orderable types and fall
-    * back to multi-column keys. */
+    * back to multi-column keys, as does everything inside
+    * [[DriverTier.withFallback]]. */
   private def pack32Bounds(b: DataFrame): (Boolean, Boolean) = {
     import org.apache.spark.sql.types.LongType
     val iL = b.schema("item").dataType == LongType
     val cL = b.schema("cust").dataType == LongType
-    if (!iL) return (false, false)
+    if (!iL || DriverTier.fallbackForced) return (false, false)
     val r =
       if (cL) b.agg(min(col("item")), max(col("item")),
         min(col("cust")), max(col("cust"))).head()
@@ -2064,7 +2066,8 @@ object Relational {
     // compare 8 key bytes instead of 16. sum(decimal) is order-free, so
     // the regrouping is exact; packing is bijective, so the anti-join
     // drops exactly the (cust, item) ownership pairs it dropped before.
-    // Probe-measured (StageProbe V2): recommend tail 6.4 → 4.2 s.
+    // Measured with a per-stage probe of this plan: recommend tail
+    // 6.4 → 4.2 s.
     val unowned = if (bounds._2) {
       val scores = owned.join(nbrs, "item")
         .groupBy(shiftleft(col("cust"), 32).bitwiseOR(col("neighbor")).as("pk"))
@@ -3369,13 +3372,13 @@ object Relational {
     // plain codegen LONG sums whenever 4·maxN³ clears Long.Max with 2×
     // headroom (maxN ≤ 10⁶); rho casts the identical integer values to
     // double, so it is bit-identical (RelationalSmokeSpec pins long ≡
-    // decimal). Bigger groups — or the test hook — keep the decimal
-    // armor unchanged.
+    // decimal). Bigger groups — or DriverTier.withFallback — keep the
+    // decimal armor unchanged.
     val maxNRow = df.groupBy(groupCol).agg(count(lit(1)).as("__n"))
       .agg(max("__n")).head()
     val maxN = if (maxNRow.isNullAt(0)) 0L else maxNRow.getLong(0)
     val asLong = maxN > 0 && maxN <= 1000000L &&
-      !sys.props.contains("graft.rank.forceDecimal")
+      !DriverTier.fallbackForced
     val rx = dblRanks(df, groupCol, xCol, asLong)
       .select(col(groupCol), col("v").as("__vx"), col("r2").as("rx"))
     val ry = dblRanks(df, groupCol, yCol, asLong)
@@ -3898,9 +3901,9 @@ object Relational {
     * min — all integer/decimal-exact, no IEEE until the caller. */
   def weightedMedian(df: DataFrame, groupCol: String, valCol: String,
       weightCol: String): DataFrame = {
-    // r19 local tier (the discPercentiles doctrine): the pick needs only
-    // the (group, value) → weight histogram; below osLocalCap collect it
-    // and pick on the driver with the identical decimal arithmetic
+    // Driver tier (DriverTier.Histogram): the pick needs only the
+    // (group, value) → weight histogram; below the cap collect it and
+    // pick on the driver with the identical decimal arithmetic
     // (BigDecimal sums ≡ Spark Decimal sums) and the identical
     // min-v-over-passing-rows semantics incl. null values/weights.
     val v0 = df.select(col(groupCol), col(valCol).as("v"),
@@ -3908,14 +3911,13 @@ object Relational {
     val dv = v0.groupBy(col(groupCol), col("v")).agg(sum("w").as("wv"))
       .persist()
     val nDv = dv.count()
-    val cmpOpt = sparkCmp(v0.schema("v").dataType)
-    if (nDv <= osLocalCap && cmpOpt.isDefined) {
+    for (cmp <- DriverTier.sparkOrder(v0.schema("v").dataType);
+         rows <- DriverTier.collectIfBounded(dv, nDv, DriverTier.Histogram)) {
       import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
       import org.apache.spark.sql.Row
-      val cmp = cmpOpt.get
       val byG = scala.collection.mutable.LinkedHashMap
         .empty[Any, scala.collection.mutable.ArrayBuffer[(Any, java.math.BigDecimal)]]
-      dv.collect().foreach { r =>
+      rows.foreach { r =>
         byG.getOrElseUpdate(r.get(0),
           scala.collection.mutable.ArrayBuffer
             .empty[(Any, java.math.BigDecimal)]) +=
@@ -3940,15 +3942,14 @@ object Relational {
           var cum = java.math.BigDecimal.ZERO
           var pick: Any = null
           var anyPass = false
-          // r20 (r19 ADVICE): rows BEFORE the first non-null weight have
-          // a null window-sum in the distributed engine (null cw fails
-          // the filter), so the pass condition is only live once a
-          // non-null weight has been folded — without this gate a
-          // degenerate group (total weight ≤ 0, possible through the
-          // decimal cast) passed its leading null-weight rows locally
-          // but dropped them distributed. Positive weights (every
-          // declared caller) are unaffected: cum·2 ≥ wtot > 0 needs at
-          // least one added weight anyway.
+          // Rows BEFORE the first non-null weight have a null window
+          // sum in the distributed engine (null cw fails the filter),
+          // so the pass condition is only live once a non-null weight
+          // has been folded — without this gate a degenerate group
+          // (total weight ≤ 0, possible through the decimal cast)
+          // passes its leading null-weight rows locally but drops them
+          // distributed. Positive weights are unaffected: cum·2 ≥ wtot
+          // > 0 needs at least one added weight anyway.
           var seen = false
           vs.foreach { case (x, wv) =>
             if (wv != null) { cum = cum.add(wv); seen = true }
@@ -3961,13 +3962,10 @@ object Relational {
           else Some(Row(g, pick, wtot.doubleValue))
         }
       }.toSeq
-      val schema = StructType(Seq(
+      return DriverTier.localFrame(df.sparkSession, StructType(Seq(
         StructField(groupCol, v0.schema(groupCol).dataType),
         StructField("w_median", v0.schema("v").dataType),
-        StructField("total_weight", DoubleType)))
-      return df.sparkSession.createDataFrame(
-        new java.util.ArrayList[Row](scala.jdk.CollectionConverters
-          .SeqHasAsJava(out).asJava), schema)
+        StructField("total_weight", DoubleType))), out)
     }
     // over-cap: the distributed engine re-derives its dv plan — kept
     // persisted here so the cache manager serves it to the eager pin
@@ -5238,49 +5236,6 @@ object Relational {
       Seq(part, dv))
   }
 
-  /** Histogram-row cap under which the order-statistic pickers
-    * (discPercentiles / weightedMedian / exactPercentilesCont) collect
-    * the distinct-(group, value) frame and pick thresholds on the
-    * driver (r19 — the BPE/CC bounded-collect doctrine). The bound is
-    * on the HISTOGRAM (distinct values × groups), not the corpus.
-    * Driver footprint at the cap is JVM-object-sized, not wire-sized
-    * (r19 ADVICE): 1 M collected GenericRows plus the per-group boxed
-    * tuple buffers and their sorted copies land in the few-hundred-MB
-    * range (more for string values / BigDecimal weights) — hence the
-    * 1 M default rather than the 2 M the r19 round shipped, and the
-    * env/prop override for drivers with headroom. Past the cap the
-    * two-phase distributed engines run unchanged — the 100 TB posture
-    * for genuinely unbounded value domains. Size-adaptive, never
-    * core-count-dependent. */
-  private[graft] def osLocalCap: Long =
-    sys.props.get("graft.os.localCap")
-      .orElse(sys.env.get("SPARK_GRAFT_OS_LOCAL_CAP"))
-      .map(_.toLong).getOrElse(1000000L)
-
-  /** Spark-consistent ASC comparator for collected values of `dt`:
-    * strings compare by UTF-8 bytes (UTF8String.compareTo — Java
-    * String order diverges past the BMP), doubles/floats by
-    * java.lang.Double/Float.compare (NaN largest; −0.0 never reaches
-    * here — group keys are NormalizeFloatingNumbers-normalized),
-    * everything else via its JDK Comparable (BigDecimal, boxed
-    * integrals, java.sql.Date/Timestamp). None = type unsupported by
-    * the local tier → callers keep the distributed engine. Null
-    * ordering (FIRST) is handled by the callers. */
-  private def sparkCmp(dt: org.apache.spark.sql.types.DataType):
-      Option[(Any, Any) => Int] = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case StringType => Some((a, b) =>
-        org.apache.spark.unsafe.types.UTF8String
-          .fromString(a.asInstanceOf[String])
-          .compareTo(org.apache.spark.unsafe.types.UTF8String
-            .fromString(b.asInstanceOf[String])))
-      case _: NumericType | DateType | TimestampType | BooleanType =>
-        Some((a, b) => a.asInstanceOf[Comparable[Any]].compareTo(b))
-      case _ => None
-    }
-  }
-
   /** Collected dv histogram grouped and value-sorted (nulls FIRST —
     * Spark's ASC default, matching the distributed cumulative): group
     * key → sorted (x, w) with w already the per-value weight. */
@@ -5335,9 +5290,7 @@ object Relational {
     val schema = StructType(
       StructField(groupName, groupType) +:
         ps.map { case (_, _, name) => StructField(name, xType) })
-    spark.createDataFrame(
-      new java.util.ArrayList[Row](scala.jdk.CollectionConverters
-        .SeqHasAsJava(out).asJava), schema)
+    DriverTier.localFrame(spark, schema, out)
   }
 
   /** Materialized form of [[discPercentilesLazy]]: one tiny per-group
@@ -5347,8 +5300,8 @@ object Relational {
     * low-cardinality group column (q134/q135/q143/q240 ride it; the
     * r13 `bi` curve measured the buffering aggregate superlinear).
     *
-    * r19 local tier: the pick itself needs only the dv HISTOGRAM —
-    * when that fits [[osLocalCap]] (probe = one count on the persisted
+    * Driver tier: the pick itself needs only the dv HISTOGRAM — when
+    * that fits [[DriverTier.Histogram]] (probe = one count on the persisted
     * frame the distributed engine needs anyway), collect it and pick on
     * the driver: same rational thresholds, same Long arithmetic, same
     * nulls-first ordering — RelationalSmokeSpec pins local ==
@@ -5361,12 +5314,11 @@ object Relational {
     val dv = v.groupBy(col(groupCol), col("x")).agg(count(lit(1)).as("w"))
       .persist()
     val nDv = dv.count()
-    val cmpOpt = sparkCmp(v.schema("x").dataType)
-    if (nDv <= osLocalCap && cmpOpt.isDefined) {
+    for (cmp <- DriverTier.sparkOrder(v.schema("x").dataType);
+         rows <- DriverTier.collectIfBounded(dv, nDv, DriverTier.Histogram)) {
       // a NULL group never survives the distributed engine (the
       // pid/offset equi-join on groupCol) — mirror by dropping it
-      val groups = groupedSorted(dv.collect(), cmpOpt.get)
-        .filter(_._1 != null)
+      val groups = groupedSorted(rows, cmp).filter(_._1 != null)
       val maxDen = ps.map(_._2.toLong).max
       // same Long-overflow envelope as the distributed cum·den compare
       if (groups.forall(_._2.foldLeft(0L)(_ + _._2) <= Long.MaxValue / maxDen)) {
@@ -5387,7 +5339,7 @@ object Relational {
     * (r19). The buffering aggregate holds the full per-group value
     * multiset in ONE aggregation buffer (the r13 `bi` curve read that
     * superlinear on low-cardinality groups); the statistic itself
-    * needs only the value HISTOGRAM, so below [[osLocalCap]] the
+    * needs only the value HISTOGRAM, so below [[DriverTier.Histogram]] the
     * histogram is collected and the pick runs on the driver with
     * EXACTLY the aggregate's arithmetic (Spark `Percentile`):
     * position = (n−1)·p (Long×Double), bracketing elements at
@@ -5415,68 +5367,63 @@ object Relational {
       case ByteType => a => a.asInstanceOf[Byte].toDouble
       case _ => null
     }
-    val cmpOpt = sparkCmp(xType)
+    val cmpOpt = DriverTier.sparkOrder(xType)
     if (toDbl != null && cmpOpt.isDefined) {
       val dv = v.groupBy(col(groupCol), col("x")).agg(count(lit(1)).as("w"))
         .persist()
-      val nDv = dv.count()
-      if (nDv > osLocalCap) {
-        // r20 (r19 ADVICE): the over-cap fallback previously re-ran the
-        // buffering aggregate on the RAW rows — the dv histogram probe
-        // was pure overhead. The frequency form percentile(x, p, w)
-        // over dv builds the identical value→count buffer the raw
-        // aggregate builds (Percentile accumulates counts per value
-        // either way), so the probe's histogram is useful on BOTH sides
-        // of the cap and the heavy shuffle runs over distinct values,
-        // not the corpus.
-        val aggs = ps.map { case (p, name) =>
-          percentile(col("x"), lit(p), col("w")).as(name) }
-        val out = dv.groupBy(groupCol).agg(aggs.head, aggs.tail: _*)
-          .localCheckpoint(true) // pin-then-release
-        dv.unpersist()
-        return out
-      }
-      {
-        val groups = groupedSorted(dv.collect(), cmpOpt.get)
-        dv.unpersist()
-        val out = groups.map { case (g, vs) =>
-          val nn = vs.filter(_._1 != null) // the aggregate skips nulls
-          if (nn.isEmpty) Row.fromSeq(g +: ps.map(_ => null))
-          else {
-            val cums = new Array[Long](nn.length)
-            var c = 0L
-            var i = 0
-            while (i < nn.length) { c += nn(i)._2; cums(i) = c; i += 1 }
-            val n = c
-            val picks = ps.map { case (p, _) =>
-              val position = (n - 1) * p
-              val lower = math.floor(position).toLong
-              val higher = math.ceil(position).toLong
-              def idxOf(rank: Long): Int = {
-                var j = 0
-                while (cums(j) < rank + 1) j += 1
-                j
-              }
-              val li = idxOf(lower)
-              val out =
-                if (higher == lower) toDbl(nn(li)._1)
-                else {
-                  val hi = idxOf(higher)
-                  if (hi == li) toDbl(nn(li)._1)
-                  else (higher - position) * toDbl(nn(li)._1) +
-                    (position - lower) * toDbl(nn(hi)._1)
+      DriverTier.collectIfBounded(dv, dv.count(), DriverTier.Histogram) match {
+        case None =>
+          // Over the cap, the frequency form percentile(x, p, w) over
+          // dv builds the identical value→count buffer the raw
+          // aggregate builds (Percentile accumulates counts per value
+          // either way), so the probe's histogram is useful on BOTH
+          // sides of the cap and the heavy shuffle runs over distinct
+          // values, not the corpus.
+          val aggs = ps.map { case (p, name) =>
+            percentile(col("x"), lit(p), col("w")).as(name) }
+          val out = dv.groupBy(groupCol).agg(aggs.head, aggs.tail: _*)
+            .localCheckpoint(true) // pin-then-release
+          dv.unpersist()
+          return out
+        case Some(rows) =>
+          val groups = groupedSorted(rows, cmpOpt.get)
+          dv.unpersist()
+          val out = groups.map { case (g, vs) =>
+            val nn = vs.filter(_._1 != null) // the aggregate skips nulls
+            if (nn.isEmpty) Row.fromSeq(g +: ps.map(_ => null))
+            else {
+              val cums = new Array[Long](nn.length)
+              var c = 0L
+              var i = 0
+              while (i < nn.length) { c += nn(i)._2; cums(i) = c; i += 1 }
+              val n = c
+              val picks = ps.map { case (p, _) =>
+                val position = (n - 1) * p
+                val lower = math.floor(position).toLong
+                val higher = math.ceil(position).toLong
+                def idxOf(rank: Long): Int = {
+                  var j = 0
+                  while (cums(j) < rank + 1) j += 1
+                  j
                 }
-              java.lang.Double.valueOf(out)
+                val li = idxOf(lower)
+                val out =
+                  if (higher == lower) toDbl(nn(li)._1)
+                  else {
+                    val hi = idxOf(higher)
+                    if (hi == li) toDbl(nn(li)._1)
+                    else (higher - position) * toDbl(nn(li)._1) +
+                      (position - lower) * toDbl(nn(hi)._1)
+                  }
+                java.lang.Double.valueOf(out)
+              }
+              Row.fromSeq(g +: picks)
             }
-            Row.fromSeq(g +: picks)
           }
-        }
-        val schema = StructType(
-          StructField(groupCol, v.schema(groupCol).dataType) +:
-            ps.map { case (_, name) => StructField(name, DoubleType) })
-        return df.sparkSession.createDataFrame(
-          new java.util.ArrayList[Row](scala.jdk.CollectionConverters
-            .SeqHasAsJava(out).asJava), schema)
+          val schema = StructType(
+            StructField(groupCol, v.schema(groupCol).dataType) +:
+              ps.map { case (_, name) => StructField(name, DoubleType) })
+          return DriverTier.localFrame(df.sparkSession, schema, out)
       }
     }
     // non-numeric / non-comparable values: the buffering aggregate on

@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.DriverTier
 import org.apache.spark.sql.functions._
 
 /** Contracts for BPE tokenizer induction (q139) and application
@@ -87,8 +88,7 @@ class BpeSpec extends SparkSpec {
       (merges, vocab, s0)
     }
     val (lm, lv, ls0) = run() // vocab 11 ≤ cap → local path
-    sys.props("graft.bpe.localCap") = "0" // force the distributed loop
-    try {
+    DriverTier.withFallback { // force the distributed loop
       val (dm, dv, ds0) = run()
       assert(ds0.isEmpty, "distributed path must not report s0")
       assert(lm == dm, s"merge tables diverge:\nlocal $lm\ndist  $dm")
@@ -98,7 +98,7 @@ class BpeSpec extends SparkSpec {
         .filter(length(col("w")) > 0)
         .agg(sum(length(col("w")) + lit(1)).cast("long")).head.getLong(0)
       assert(ls0.contains(s0Scan), s"s0 ${ls0} != corpus scan $s0Scan")
-    } finally sys.props.remove("graft.bpe.localCap")
+    }
   }
 
   test("q276 conservation: every word reconstructs, bounds hold, totals exact (r17)") {

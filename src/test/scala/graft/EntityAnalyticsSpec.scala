@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.DriverTier
 import org.apache.spark.sql.functions._
 
 /** Contracts for the r11 analytics batch: fuzzy entity resolution
@@ -505,9 +506,7 @@ class EntityAnalyticsSpec extends SparkSpec {
     def run(): Map[Long, Double] = Graph.pageRank(g, iterations = 10)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val local = run() // 12 symmetric edge rows << cap -> driver loop
-    val dist = try {
-      System.setProperty("graft.cc.localCap", "0"); run()
-    } finally System.clearProperty("graft.cc.localCap")
+    val dist = DriverTier.withFallback(run())
     assert(local.keySet == dist.keySet)
     // same update arithmetic, different float-sum order (the operator's
     // documented rows-only rationale) -> tolerance, not bit equality
@@ -714,12 +713,11 @@ class EntityAnalyticsSpec extends SparkSpec {
     // unique; degrees must match row-multiplicity semantics exactly)
     val local = graft.operators.Graph.kCore(edges, k = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    sys.props("graft.cc.localCap") = "0"
-    try {
+    DriverTier.withFallback {
       val dist = graft.operators.Graph.kCore(edges, k = 2)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(local == dist, s"local $local vs distributed $dist")
-    } finally sys.props.remove("graft.cc.localCap")
+    }
   }
 
   // ---- q138 skip-grams ----
@@ -789,6 +787,48 @@ class EntityAnalyticsSpec extends SparkSpec {
     assert(got(("A", "B")) == ((0.5, 1.25)))
     assert(got(("B", "A")) == ((1.0, 1.25)))
     assert(!got.contains(("A", "C")), "co=0 and co<minSupport pairs cut")
+  }
+
+  test("recsys packed Long keys == multi-column keys across id domains and under withFallback") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.types._
+    import graft.operators.Relational
+    // (cust, item) over ids 0..4 with co and sim ties; each domain maps
+    // every id order-preservingly (ties break by id) and back
+    val base = Seq((1L, 0L), (1L, 1L), (1L, 2L), (2L, 0L), (2L, 1L),
+      (3L, 1L), (3L, 3L), (4L, 2L), (4L, 3L), (4L, 4L), (5L, 0L),
+      (5L, 4L), (6L, 1L), (6L, 2L), (6L, 4L))
+    val big = 1L << 31
+    val domains: Seq[(String, DataType, Long => Any, Any => Long, Boolean)] = Seq(
+      ("Long in [0, 2^31), packed", LongType, i => i, _.asInstanceOf[Long], false),
+      ("Long in [0, 2^31), withFallback", LongType, i => i, _.asInstanceOf[Long], true),
+      ("negative Long", LongType, _ - 100L, _.asInstanceOf[Long] + 100L, false),
+      ("Long >= 2^31", LongType, _ + big, _.asInstanceOf[Long] - big, false),
+      ("Int", IntegerType, _.toInt, _.asInstanceOf[Int].toLong, false),
+      ("String", StringType, i => f"i$i%03d", _.asInstanceOf[String].tail.toLong, false))
+    def idsBack(df: DataFrame, back: Any => Long): Set[Seq[Any]] =
+      df.collect().map(r => r.toSeq.zipWithIndex.map {
+        case (v, i) => if (i < 2) back(v) else v }).toSet
+    val results = domains.map { case (name, dt, to, back, forced) =>
+      val baskets = spark.createDataFrame(
+        java.util.Arrays.asList(base.map { case (c, i) => Row(to(c), to(i)) }: _*),
+        StructType(Seq(StructField("cust", dt), StructField("item", dt))))
+      def run() = {
+        val nbrs = Relational.itemNeighbors(baskets, 2)
+        val packed = nbrs.queryExecution.analyzed.toString.contains("shiftleft")
+        (packed, Seq(idsBack(nbrs, back),
+          idsBack(Relational.associationRules(baskets, 1), back),
+          idsBack(Relational.recommendItems(baskets, 2, 2), back)))
+      }
+      name -> (if (forced) DriverTier.withFallback(run()) else run())
+    }
+    val (refPacked, ref) = results.head._2
+    assert(refPacked, "the in-range Long reference must take the packed keys")
+    assert(ref.forall(_.nonEmpty))
+    results.tail.foreach { case (name, (packed, got)) =>
+      assert(!packed, s"$name must fall back to multi-column keys")
+      assert(got == ref, s"$name diverged:\n got $got\n ref $ref")
+    }
   }
 
   test("quantileNormalize maps each group onto the reference distribution") {
@@ -1447,8 +1487,7 @@ class EntityAnalyticsSpec extends SparkSpec {
     // force the DISTRIBUTED loop: the round-budget contract is a
     // property of the propagation engine; the r19 local union-find
     // fast path has no rounds to exhaust
-    sys.props("graft.cc.localCap") = "0"
-    try {
+    DriverTier.withFallback {
       val chain = spark.range(30).selectExpr("id AS src", "id + 1 AS dst")
       val e = intercept[IllegalStateException] {
         graft.operators.Graph.connectedComponents(chain, maxIter = 5).count()
@@ -1458,7 +1497,7 @@ class EntityAnalyticsSpec extends SparkSpec {
       val cc = graft.operators.Graph.connectedComponentsStar(chain)
       assert(cc.filter(org.apache.spark.sql.functions.col("component") === 0L)
         .count() == 31L)
-    } finally sys.props.remove("graft.cc.localCap")
+    }
   }
 
   test("connectedComponents accepts a graph settling in EXACTLY maxIter rounds (r18)") {
@@ -1467,13 +1506,12 @@ class EntityAnalyticsSpec extends SparkSpec {
     // check must not condemn correct output (r18 ADVICE fix: one extra
     // observation round before throwing). Distributed loop forced: the
     // observation-round behavior is what this pins.
-    sys.props("graft.cc.localCap") = "0"
-    try {
+    DriverTier.withFallback {
       val chain = spark.range(5).selectExpr("id AS src", "id + 1 AS dst")
       val cc = graft.operators.Graph.connectedComponents(chain, maxIter = 5)
       assert(cc.filter(org.apache.spark.sql.functions.col("component") === 0L)
         .count() == 6L)
-    } finally sys.props.remove("graft.cc.localCap")
+    }
   }
 
   test("local union-find CC == distributed propagation/star on mixed graphs (r19)") {
@@ -1490,15 +1528,14 @@ class EntityAnalyticsSpec extends SparkSpec {
         .collect().map(r => (r.get(0), r.get(1))).toSet
       val localStar = graft.operators.Graph.connectedComponentsStar(df)
         .collect().map(r => (r.get(0), r.get(1))).toSet
-      sys.props("graft.cc.localCap") = "0"
-      try {
+      DriverTier.withFallback {
         val dist = graft.operators.Graph.connectedComponents(df, 60)
           .collect().map(r => (r.get(0), r.get(1))).toSet
         val distStar = graft.operators.Graph.connectedComponentsStar(df)
           .collect().map(r => (r.get(0), r.get(1))).toSet
         assert(local == dist, s"local $local vs distributed $dist")
         assert(localStar == distStar, s"local-star $localStar vs $distStar")
-      } finally sys.props.remove("graft.cc.localCap")
+      }
     }
     run(edgesL)
     run(edgesS)

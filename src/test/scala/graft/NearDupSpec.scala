@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.DriverTier
 import org.apache.spark.sql.functions._
 import graft.ext.{NearDup, TextOps}
 
@@ -36,13 +37,30 @@ class NearDupSpec extends SparkSpec {
     val docs = graft.sources.Tables.documents(spark, sf("sf0.001"))
     val local = NearDup.nearDupGroups(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    sys.props("graft.cc.localCap") = "0" // force the propagation loop
-    try {
+    DriverTier.withFallback { // force the propagation loop
       val dist = NearDup.nearDupGroups(docs).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(local == dist,
         s"diff: ${(local -- dist).take(5)} / ${(dist -- local).take(5)}")
-    } finally sys.props.remove("graft.cc.localCap")
+    }
+  }
+
+  test("nearDupGroups past maxIter fails fast like connectedComponents; the driver tier spans the chain") {
+    // doc i = words i..i+6 of one sequence: neighbours share 4 of their
+    // 6 word 3-shingles (Jaccard 0.67 ≥ 0.5), docs two apart 3 of 7
+    // (0.43), so the near-dup graph is a 12-doc path of diameter 11
+    val words = (0 until 18).map(i => f"w$i%02d")
+    val docs = spark.createDataFrame((0 until 12).map(i =>
+      (i.toLong, words.slice(i, i + 7).mkString(" ")))).toDF("doc_id", "text")
+    val groups = NearDup.nearDupGroups(docs, maxIter = 3).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(groups == (0L until 12L).map(_ -> 0L).toMap, s"groups $groups")
+    // 3 propagation rounds cannot span diameter 11: the same error as
+    // Graph.connectedComponents, never silently split groups
+    val e = intercept[IllegalStateException] {
+      DriverTier.withFallback(NearDup.nearDupGroups(docs, maxIter = 3).count())
+    }
+    assert(e.getMessage.contains("did not converge in 3 rounds"), e.getMessage)
   }
 
   test("dedup is idempotent: dedup(dedup(x)) == dedup(x)") {

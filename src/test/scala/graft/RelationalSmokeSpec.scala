@@ -1,5 +1,7 @@
 package graft
 
+import graft.core.DriverTier
+
 /** Pins the cross-engine-validated facts from SURVEY.md §2.3 on sf0.001.
   * (Full hash-for-hash coverage lives in the driver's DuckDB gate /
   * tools/check_oracle.py; these are fast regressions.) */
@@ -472,16 +474,13 @@ class RelationalSmokeSpec extends SparkSpec {
       graft.operators.Relational.spearman(rows, "g", "x", "y")
         .orderBy("g").collect().toSeq
     val fast = run() // maxN = 6 <= 1e6 -> long path
-    val armored = try {
-      System.setProperty("graft.rank.forceDecimal", "1"); run()
-    } finally System.clearProperty("graft.rank.forceDecimal")
+    val armored = DriverTier.withFallback(run())
     assert(fast == armored, s"fast=$fast armored=$armored")
     // and the fixture query itself: both paths agree on q186's rows
     val q = SparkEntry.queries("q186_spearman")(spark, d).collect().toSeq
-    val qArmored = try {
-      System.setProperty("graft.rank.forceDecimal", "1")
+    val qArmored = DriverTier.withFallback {
       SparkEntry.queries("q186_spearman")(spark, d).collect().toSeq
-    } finally System.clearProperty("graft.rank.forceDecimal")
+    }
     assert(q == qArmored)
   }
 
@@ -494,13 +493,13 @@ class RelationalSmokeSpec extends SparkSpec {
       ("a", null, 9.0), ("a", 2.0, null),
       ("b", 5.0, 1.0), ("b", 5.0, 1.0), ("b", 5.0, 1.0),
       (null, 4.0, 2.0), (null, 8.0, 1.0),
-      ("c", null, 3.0) // all-null values: disc bounds null, wm dropped
+      ("c", null, 3.0), // all-null values: disc bounds null, wm dropped
+      // total weight 0 and < 0: a leading null-weight row has a null
+      // cumulative sum distributed, so it must not pass the wm pick
+      ("z", 1.0, null), ("z", 2.0, 1.0), ("z", 3.0, -1.0),
+      ("n", 1.0, null), ("n", 2.0, 1.0), ("n", 3.0, -2.0)
     )
     val df = { import spark.implicits._; rows.toDF("g", "x", "w") }
-    def withDistributed[T](body: => T): T = {
-      System.setProperty("graft.os.localCap", "0")
-      try body finally System.clearProperty("graft.os.localCap")
-    }
     def cmp(name: String, fast: Seq[org.apache.spark.sql.Row],
         ref: Seq[org.apache.spark.sql.Row]): Unit =
       assert(fast.map(_.toString).sorted == ref.map(_.toString).sorted,
@@ -508,18 +507,18 @@ class RelationalSmokeSpec extends SparkSpec {
     val ps = Seq((1, 4, "p25"), (1, 2, "med"), (19, 20, "p95"))
     cmp("discPercentiles",
       Relational.discPercentiles(df, "g", "x", ps).collect().toSeq,
-      withDistributed(
+      DriverTier.withFallback(
         Relational.discPercentiles(df, "g", "x", ps).collect().toSeq))
     cmp("weightedMedian",
       Relational.weightedMedian(df, "g", "x", "w").collect().toSeq,
-      withDistributed(
+      DriverTier.withFallback(
         Relational.weightedMedian(df, "g", "x", "w").collect().toSeq))
     // interpolated: local picker vs the buffering aggregate, exact bits,
     // on the edge frame AND the fixture q39 shape (decimal input)
     val cps = Seq((0.5, "p50"), (0.95, "p95"))
     cmp("exactPercentilesCont",
       Relational.exactPercentilesCont(df, "g", "x", cps).collect().toSeq,
-      withDistributed(
+      DriverTier.withFallback(
         Relational.exactPercentilesCont(df, "g", "x", cps).collect().toSeq))
     val li = graft.sources.Tables.lineitem(spark, d)
     val fastQ = Relational.exactPercentilesCont(li, "l_returnflag",

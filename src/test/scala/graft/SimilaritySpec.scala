@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.DriverTier
 import org.apache.spark.sql.functions._
 import graft.ext.{Ann, Similarity}
 import graft.sources.Tables
@@ -400,15 +401,14 @@ class SimilaritySpec extends SparkSpec {
     val fast = Similarity.covarianceMatrix(embd).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .toSet
-    sys.props("graft.cov.forceDecimal") = "1"
-    try {
+    DriverTier.withFallback {
       val dec = Similarity.covarianceMatrix(embd).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
         .toSet
       assert(fast == dec,
         s"diff: ${(fast -- dec).take(3)} / ${(dec -- fast).take(3)}")
       assert(fast.size == 2080, s"cell count ${fast.size}")
-    } finally sys.props.remove("graft.cov.forceDecimal")
+    }
   }
 
   test("topComponent fails fast on constant embeddings (r17 ADVICE: no silent NaN)") {
