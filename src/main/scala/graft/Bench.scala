@@ -36,6 +36,12 @@ import org.apache.spark.sql.functions._
   *    load window as an operator regression. q224's bucketed write
   *    and serve phases are additionally timed apart
   *    ("q224_build_sec"/"q224_serve_sec").
+  *  - the S1 figures (`s1_ingest_rows_per_sec`,
+  *    `s1_sustained_rows_per_sec`) time parse → explode into a noop
+  *    write, so they EXCLUDE the sink. S1 with its partitioned parquet
+  *    sink and checkpoint commit is perfbench's `ingest_backlog`
+  *    workload (`python3 perfbench/run.py --workload ingest_backlog`),
+  *    which reads orders of magnitude lower.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -211,6 +217,8 @@ object Bench {
     // S1 ingestion throughput (BASELINE.md): synthetic envelopes with 10
     // datapoints each through the reference pipeline (parse → explode →
     // derivations; narrow, zero-shuffle). rows/s = exploded DataPoints/s.
+    // The noop write EXCLUDES the sink: this is the parse/explode
+    // ceiling, not S1 as deployed (see the scaladoc above).
     //
     // r15 (r14 verdict #1): this segment runs LAST, off the back of the
     // full suite + isolated heavies, and the r14 driver artifact read
@@ -222,34 +230,39 @@ object Bench {
     // JSON ("s1_shots_rows_per_sec") so a stall window is diagnosable
     // from the artifact alone (best-of-N alone hides which shot stalled).
     val loadavgS1Start = loadavg()
-    val s1Shots: Seq[(Double, Double)] = { // (rows/s, loadavg after shot)
-      sweepCaches(); System.gc(); Thread.sleep(1000) // drain before timing
-      // env-tunable for diagnosis (r17 S1 bisect: the 2 M-row default
-      // makes a ~0.8 s shot, short enough that fixed per-job overhead
-      // is a visible fraction; the committed protocol stays 200 k)
-      val envelopes = sys.env.get("SPARK_GRAFT_S1_ENVELOPES")
-        .map(_.toLong).getOrElse(200000L)
-      val perEnv = 10
-      val raw = spark.range(envelopes).select(concat(
+    // One generator for every S1 shot: `n` envelopes of `perEnv`
+    // datapoints, persisted so a shot measures the pipeline, not the
+    // generator.
+    val perEnv = 10
+    def envelopes(n: Long): org.apache.spark.sql.DataFrame = {
+      val raw = spark.range(n).select(concat(
         lit("""{"datastream_id":"""), col("id") % 500, lit(""","data":["""),
         concat_ws(",", (0 until perEnv).map(i => concat(
           lit("""{"dateTime":"""), col("id") * 1000L + i,
           lit(s""","offset":${i * 61000},"sample":{"v":"""), col("id") + i,
           lit("}}"))): _*),
         lit("]}")).as("value"))
-      raw.persist().count() // materialize: measure the pipeline, not the generator
+      raw.persist().count()
+      raw
+    }
+    def ingestSeconds(raw: org.apache.spark.sql.DataFrame): Double = {
+      val t0 = System.nanoTime()
       Ingest.dataPoints(Ingest.parse(raw))
-        .write.format("noop").mode("overwrite").save() // warmup
+        .write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
+    }
+    val s1Shots: Seq[(Double, Double)] = { // (rows/s, loadavg after shot)
+      sweepCaches(); System.gc(); Thread.sleep(1000) // drain before timing
+      val n = 200000L // the committed protocol: 2 M rows a shot
+      val raw = envelopes(n)
+      ingestSeconds(raw) // warmup
       // best of 3 reported, every shot recorded — same host-stall
       // reasoning as the query passes (a single shot landed at 53 k
       // rows/s inside a stall window vs the multi-M rows/s this
       // pipeline actually sustains); a GC drain between shots so one
       // stalled shot can't hold the heap hostage for the next.
       val shots = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        Ingest.dataPoints(Ingest.parse(raw))
-          .write.format("noop").mode("overwrite").save()
-        val rps = envelopes * perEnv / ((System.nanoTime() - t0) / 1e9)
+        val rps = n * perEnv / ingestSeconds(raw)
         System.gc()
         (rps, loadavg()) // per-shot host load: a stalled shot names its window
       }
@@ -270,23 +283,11 @@ object Bench {
     // (r18 ADVICE fix).
     val s1Sustained: Option[Double] = {
       sweepCaches(); System.gc(); Thread.sleep(500)
-      def shot(envelopes: Long): Double = {
-        val perEnv = 10
-        val raw = spark.range(envelopes).select(concat(
-          lit("""{"datastream_id":"""), col("id") % 500, lit(""","data":["""),
-          concat_ws(",", (0 until perEnv).map(i => concat(
-            lit("""{"dateTime":"""), col("id") * 1000L + i,
-            lit(s""","offset":${i * 61000},"sample":{"v":"""), col("id") + i,
-            lit("}}"))): _*),
-          lit("]}")).as("value"))
-        raw.persist().count()
-        Ingest.dataPoints(Ingest.parse(raw))
-          .write.format("noop").mode("overwrite").save() // warmup
+      def shot(n: Long): Double = {
+        val raw = envelopes(n)
+        ingestSeconds(raw) // warmup
         val best = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          Ingest.dataPoints(Ingest.parse(raw))
-            .write.format("noop").mode("overwrite").save()
-          val t = (System.nanoTime() - t0) / 1e9
+          val t = ingestSeconds(raw)
           System.gc(); t
         }.min
         raw.unpersist()

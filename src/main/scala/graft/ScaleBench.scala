@@ -85,7 +85,8 @@ object ScaleBench {
   /** Deterministic synthetic embedding corpus: (vec_id, embedding) —
     * 64-dim floats around `nClusters` Gaussian centers (cluster
     * structure is what IVF cells capture; the sf fixture's near-uniform
-    * vectors are the worst case, see AnnProbeBench). */
+    * vectors are the worst case: the r9 IVF probe curve in
+    * BASELINE.md). */
   def vecCorpus(spark: SparkSession, n: Long, dim: Int = 64,
       nClusters: Int = 50): DataFrame = {
     val gen = udf { (id: Long) =>

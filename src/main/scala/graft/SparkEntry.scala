@@ -604,7 +604,8 @@ object SparkEntry {
     // q249: spherical radius join — naive all-pairs evaluating the
     // IDENTICAL polynomial-haversine layer text the engine compiles
     // (generated from one source of truth in Geo; trig/exp are NOT
-    // bit-portable across engines per the LibmProbe measurement, so
+    // bit-portable across engines — measured last-ulp disagreement on
+    // 0.2–9.7% of inputs, see Geo — so
     // the distance is a defined +,-,*,/ series — see Geo scaladoc)
     "q249_haversine_join" -> graft.operators.Geo.q249OracleSql,
     // q250: point-in-polygon — naive per-(point, edge) integer
@@ -612,8 +613,8 @@ object SparkEntry {
     "q250_point_in_poly" -> graft.operators.Spatial.q250OracleSql,
     // q251: trained quality classifier — the identical fixed-iteration
     // GD unrolled as a generated CTE chain (quantized-integer
-    // gradients, softsign link — exp() is not bit-portable per
-    // LibmProbe; margins via the q79 ordered-fold pair)
+    // gradients, softsign link — exp() disagrees with DuckDB in the
+    // last ulp on ~10% of inputs; margins via the q79 ordered-fold pair)
     "q251_quality_clf" -> graft.ext.Classifier.q251OracleSql(64, 16, 0.25),
     // q252: pipeline v7 — the q251 chain + classifier gate + exact
     // dedup + the q63/q243 shard/digest tail

@@ -297,7 +297,8 @@ object Ann {
 
   /** Q92 (r11) — the IVF+SQ QUANTIZED search path under the ORACLE gate
     * (r10 VERDICT item 7: searchQuantized had recall contracts in
-    * ScalaTest/AnnProbeBench but no end-to-end hash gate). Same protocol
+    * ScalaTest and a measured recall curve but no end-to-end hash
+    * gate). Same protocol
     * as q34 — full probe (nProbe = nCentroids) makes bucket pruning
     * lossless, and rescoreK = 50 ≫ k = 10 makes the code-ranked
     * candidate set provably contain the true top-k at this fixture's
@@ -480,8 +481,8 @@ object Ann {
     * and q34's DuckDB oracle applies verbatim. The gate intentionally
     * over-rescans: it hash-checks the train→quantize→ADC-scan→rescore
     * CHAIN, while the recall-per-rescore-depth tradeoff of the
-    * production operating point (rescoreK = 100) is measured in the
-    * AnnProbeBench PQ ladder — an sf0.1 sweep showed rescoreK = 100
+    * production operating point (rescoreK = 100) was measured by an
+    * r11 PQ ladder (BASELINE.md) — an sf0.1 sweep showed rescoreK = 100
     * dropping 1 of 50 true hits on the near-uniform fixture (the
     * documented ANN worst case), which is an approximation-quality
     * fact, not a chain defect. Codebooks train on the ≤512 lowest-id

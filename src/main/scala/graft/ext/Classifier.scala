@@ -15,8 +15,8 @@ import graft.sources.Tables
   * which is exactly the distillation move those pipelines make).
   *
   * DETERMINISM (the gate is hash-strict on every score):
-  *  - NO exp(): the LibmProbe measurement shows JVM and DuckDB exp()
-  *    disagree in the last ulp on ~10% of inputs, so the link is the
+  *  - NO exp(): JVM and DuckDB exp() measured a last-ulp
+  *    disagreement on ~10% of 200k inputs, so the link is the
   *    SOFTSIGN surrogate p = ½(1 + m/(1+|m|)) — +,-,*,/,abs only,
   *    every op fully determined by IEEE 754 and mirrored.
   *  - The gradient is EXACT INTEGER arithmetic: probabilities are

@@ -2378,7 +2378,8 @@ object TextOps {
     *
     * Determinism: counts are exact BIGINTs; each term is one division
     * then LN — the mirrored-libm portable class (sqrt/ln/log10/pow,
-    * gate-proven since r3; NOT exp/trig, the LibmProbe split) — and
+    * gate-proven since r3; NOT exp/trig, which measured last-ulp
+    * JVM/DuckDB disagreement, see Geo) — and
     * the per-doc sum folds in POSITION order (the q79 ordered-fold
     * doctrine; positions are unique within a doc, so the order is
     * total on both engines).

@@ -13,7 +13,7 @@ import graft.sources.Tables
   * (its full pipeline is RawDataIngestion.java:95-169); this is
   * north-star territory.
   *
-  * DETERMINISM DOCTRINE EXTENSION (measured, `graft.LibmProbe`): the
+  * DETERMINISM DOCTRINE EXTENSION (measured in r15, BASELINE.md): the
   * mirrored-libm doctrine (q157's sqrt/ln/log10/pow class) does NOT
   * extend to trig/exp — on this host JVM `Math` and DuckDB's libm
   * disagree in the last ulp on 0.2% of sin/cos inputs, 6% of asin and

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -161,6 +161,19 @@ case class SkipPair(user_id: Long, a_type: String, b_type: String,
   * Each takes a (streaming or batch) DataFrame with the events schema
   * (ts: timestamp, user_id, event_type, value, event_id).
   *
+  * Stateful machines (S10 onwards) all run on one keyed event-time
+  * fold, [[keyedRows]]. Its contract:
+  *  - event time is a Long of epoch µs, `ts_us`, computed in Catalyst
+  *    by `unix_micros(ts)`; no typed row carries a timestamp object;
+  *  - every event-time timer is armed through `armTimeout`, clamped
+  *    past the current watermark, and every (ts_us, event_id) anchor
+  *    test goes through `stale`;
+  *  - the state case classes above, with each machine's key type, ARE
+  *    the checkpoint format: Spark stores state under their encoder
+  *    schemas, so editing one in place breaks the restart of every
+  *    deployed query (StreamRestartSpec pins their DDL). A new state
+  *    shape is a new class.
+  *
   * Scale notes: all stateful ops are keyed and watermarked, so state
   * is bounded and evicted; at cluster scale back them with the RocksDB
   * state store (`spark.sql.streaming.stateStore.providerClass`) —
@@ -168,6 +181,50 @@ case class SkipPair(user_id: Long, a_type: String, b_type: String,
   * provider and asserts identical results + live RocksDB metrics.
   */
 object StreamOps {
+
+  /** Encoders for the machines' typed rows, keys, state and output. */
+  private object Enc extends org.apache.spark.sql.EncoderImplicits
+  import Enc._
+
+  /** A machine's typed input, ready to group by key and fold. */
+  private final class KeyedRows[R](rows: Dataset[R]) {
+    /** Group by `key` (its type is the state's key schema) and run `f`
+      * once per key and micro-batch, under `timeout` and `mode`. */
+    def fold[K: Encoder, S: Encoder, O: Encoder](key: R => K,
+        timeout: GroupStateTimeout = GroupStateTimeout.NoTimeout,
+        mode: OutputMode = OutputMode.Append)(
+        f: (K, Iterator[R], GroupState[S]) => Iterator[O]): DataFrame =
+      rows.groupByKey(key).flatMapGroupsWithState(mode, timeout)(f).toDF()
+  }
+
+  /** The one way a stateful machine sees its input. With a `watermark`
+    * the frame is watermarked on `ts` and gains `ts_us` = unix_micros(ts),
+    * which carries the watermark's column metadata: Spark drops rows
+    * behind the watermark before an event-time-timeout fold by reading
+    * that column, so a machine with such a timeout keeps `ts_us` in its
+    * row. Without a watermark the machine has no event time. `where`
+    * filters after the watermark (the watermark sees every row); `cols`
+    * project the typed row `R`. */
+  private def keyedRows[R: Encoder](in: DataFrame, watermark: Option[String],
+      where: Column = lit(true))(cols: Column*): KeyedRows[R] = {
+    val timed = watermark.fold(in) { w =>
+      val wm = in.withWatermark("ts", w)
+      wm.select(col("*"),
+        unix_micros(col("ts")).as("ts_us", wm.schema("ts").metadata))
+    }
+    new KeyedRows(timed.filter(where).select(cols: _*).as[R])
+  }
+
+  /** Arm the event-time timeout at `atMs`, clamped past the current
+    * watermark: EventTimeTimeout rejects a timestamp at or behind it,
+    * which a within-watermark late event could otherwise compute. */
+  private def armTimeout(state: GroupState[_], atMs: Long): Unit =
+    state.setTimeoutTimestamp(math.max(atMs, state.getCurrentWatermarkMs() + 1L))
+
+  /** The monotonic guard of the (ts_us, event_id) total order: an event
+    * at or behind the anchor (aUs, aId) is a stale straggler. */
+  private def stale(tu: Long, id: Long, aUs: Long, aId: Long): Boolean =
+    tu < aUs || (tu == aUs && id <= aId)
 
   /** S2 — tumbling event-time window counts (the event-time analog of
     * the reference's 5 s processing-time batch, RawDataIngestion.java:91). */
@@ -304,19 +361,6 @@ object StreamOps {
           col(rTs) <= col(lTs) + expr(s"interval $horizon"),
         joinType)
 
-  /** S10 — arbitrary stateful processing via flatMapGroupsWithState
-    * (SURVEY §2.4's custom-state row — the semantics session_window
-    * can't express: a gap-split session that EMITS each closed session
-    * exactly once, with per-key state the operator owns). Per user:
-    * events extend the open session; a gap > `gapMs` closes it and
-    * emits; an event-time timeout (watermark passing last event + gap)
-    * closes an idle session without needing another event for that key.
-    *
-    * Scale posture: state is one fixed-size record per ACTIVE key (not
-    * per event), keyed-partitioned by user — at 1000 executors each
-    * holds |active users|/1000 records; timeouts evict idle keys so
-    * state does not grow with stream age. Output is Append — safe for
-    * any sink. */
   // ---- batch-analog oracle gates (r8 verdict #7): Structured
   // Streaming's result-table semantics say a streaming aggregation's
   // final result equals the same plan run as a batch query over the
@@ -434,13 +478,10 @@ object StreamOps {
       events: DataFrame,
       steps: Seq[(String, Long)],
       watermark: String = "10 seconds"): DataFrame = {
-    val s = events.sparkSession
-    import s.implicits._
     val stepIdx = steps.map(_._1).zipWithIndex.toMap
     val windowsUs = steps.map(_._2).toArray
     val k = steps.length
-    // Times are epoch MICROS end to end (java.sql.Timestamp.getTime is
-    // ms — the sub-ms digits live in getNanos), so step windows take
+    // Times are epoch MICROS end to end (ts_us), so step windows take
     // the SAME micro units as the batch funnelUsers and the strict
     // tm > t comparisons agree with the batch chain at full precision
     // (the fixture's events are µs-distinct; an ms truncation diverged
@@ -456,15 +497,10 @@ object StreamOps {
     // any later event fails the window filter anyway. Never-entered
     // users evict one horizon past the watermark.
     val totalWindowUs = windowsUs.sum
-    def micros(ts: java.sql.Timestamp): Long =
-      ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
-    events.withWatermark("ts", watermark)
-      .select(col("user_id").cast("long"), col("event_type"), col("ts"))
-      .as[(Long, String, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[(Long, String, java.sql.Timestamp)],
-         state: GroupState[FunnelProgress]) =>
+    keyedRows[(Long, String, Long)](events, Some(watermark))(
+        col("user_id").cast("long"), col("event_type"), col("ts_us"))
+      .fold(_._1, GroupStateTimeout.EventTimeTimeout) {
+        (uid, rows, state: GroupState[FunnelProgress]) =>
           if (state.hasTimedOut) {
             state.remove()
             Iterator.empty
@@ -472,7 +508,7 @@ object StreamOps {
             val t = state.getOption.map(_.times.clone())
               .getOrElse(Array.fill(k)(-1L))
             val evs = rows.collect {
-              case (_, et, ts) if stepIdx.contains(et) => (micros(ts), stepIdx(et))
+              case (_, et, tu) if stepIdx.contains(et) => (tu, stepIdx(et))
             }.toArray.sortBy(identity)
             var emitted = List.empty[FunnelHit]
             evs.foreach { case (tm, i) =>
@@ -496,11 +532,10 @@ object StreamOps {
             val horizonMs =
               if (t(0) >= 0) t(0) / 1000 + totalWindowUs / 1000
               else state.getCurrentWatermarkMs() + totalWindowUs / 1000
-            state.setTimeoutTimestamp(
-              math.max(horizonMs, state.getCurrentWatermarkMs() + 1))
+            armTimeout(state, horizonMs)
             emitted.reverse.iterator
           }
-      }.toDF()
+      }
   }
 
   /** S15 (r11) — streaming anomaly detection: the real-time form of the
@@ -531,21 +566,14 @@ object StreamOps {
       threshold: Double = 2.5,
       minCount: Long = 30,
       watermark: String = "10 seconds"): DataFrame = {
-    val s = events.sparkSession
-    import s.implicits._
-    events.withWatermark("ts", watermark)
-      .select(col("event_type"), col("event_id").cast("long"),
-        col("value").cast("double"), col("ts"))
-      .as[(String, Long, Double, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (grp: String, rows: Iterator[(String, Long, Double, java.sql.Timestamp)],
-         state: GroupState[MomentState]) =>
+    keyedRows[(String, Long, Double, Long)](events, Some(watermark))(
+        col("event_type"), col("event_id").cast("long"),
+        col("value").cast("double"), col("ts_us"))
+      .fold(_._1) { (grp, rows, state: GroupState[MomentState]) =>
           val st = state.getOption.getOrElse(MomentState(0L, 0.0, 0.0))
           // sort by event time (micros — ms ties of µs-distinct events
           // would fall to the id tie-break): deterministic fold order
-          val batch = rows.toArray.sortBy(r =>
-            (r._4.getTime * 1000L + (r._4.getNanos / 1000L) % 1000L, r._2))
+          val batch = rows.toArray.sortBy(r => (r._4, r._2))
           val out = List.newBuilder[Anomaly]
           if (st.n >= minCount) {
             val mean = st.s / st.n
@@ -561,7 +589,7 @@ object StreamOps {
           }
           state.update(folded)
           out.result().iterator
-      }.toDF()
+      }
   }
 
   /** S16 (r11) — streaming heavy hitters: the real-time form of the
@@ -590,22 +618,15 @@ object StreamOps {
       events: DataFrame,
       k: Int = 8,
       watermark: String = "10 seconds"): DataFrame = {
-    val s = events.sparkSession
-    import s.implicits._
-    events.withWatermark("ts", watermark)
-      .select(col("event_type"), col("user_id").cast("long"), col("ts"))
-      .as[(String, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (grp: String, rows: Iterator[(String, Long, java.sql.Timestamp)],
-         state: GroupState[MgState]) =>
+    keyedRows[(String, Long, Long)](events, Some(watermark))(
+        col("event_type"), col("user_id").cast("long"), col("ts_us"))
+      .fold(_._1) { (grp, rows, state: GroupState[MgState]) =>
           val m = scala.collection.mutable.LongMap[Long]()
           val st = state.getOption.getOrElse(MgState(Array.empty, Array.empty, 0L))
           st.ids.zip(st.counts).foreach { case (id, c) => m(id) = c }
           var n = st.n
           // deterministic fold order (event time in micros, then key)
-          rows.toArray.sortBy(r =>
-            (r._3.getTime * 1000L + (r._3.getNanos / 1000L) % 1000L, r._2))
+          rows.toArray.sortBy(r => (r._3, r._2))
             .foreach { case (_, id, _) =>
             n += 1
             if (m.contains(id)) m(id) += 1
@@ -621,7 +642,7 @@ object StreamOps {
           val sorted = m.toArray.sortBy { case (id, c) => (-c, id) }
           state.update(MgState(sorted.map(_._1), sorted.map(_._2), n))
           Iterator.single(MgSummary(grp, n, sorted.map(_._1), sorted.map(_._2)))
-      }.toDF()
+      }
   }
 
   /** S17 (r11) — streaming trend fit: the real-time form of the batch
@@ -643,25 +664,17 @@ object StreamOps {
   def trendStream(
       events: DataFrame,
       watermark: String = "10 seconds"): DataFrame = {
-    val s = events.sparkSession
-    import s.implicits._
-    events.withWatermark("ts", watermark)
-      .select(col("event_type"), col("event_id").cast("long"),
-        col("value").cast("double"), col("ts"))
-      .as[(String, Long, Double, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (grp: String, rows: Iterator[(String, Long, Double, java.sql.Timestamp)],
-         state: GroupState[TrendState]) =>
-          def micros(ts: java.sql.Timestamp): Long =
-            ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
-          val batch = rows.toArray.sortBy(r => (micros(r._4), r._2))
+    keyedRows[(String, Long, Double, Long)](events, Some(watermark))(
+        col("event_type"), col("event_id").cast("long"),
+        col("value").cast("double"), col("ts_us"))
+      .fold(_._1) { (grp, rows, state: GroupState[TrendState]) =>
+          val batch = rows.toArray.sortBy(r => (r._4, r._2))
           if (batch.isEmpty) Iterator.empty
           else {
             val st0 = state.getOption.getOrElse(
-              TrendState(0L, micros(batch.head._4) / 1000000L, 0, 0, 0, 0, 0))
-            val st = batch.foldLeft(st0) { case (m, (_, _, v, ts)) =>
-              val x = (micros(ts) / 1000000L - m.x0).toDouble
+              TrendState(0L, batch.head._4 / 1000000L, 0, 0, 0, 0, 0))
+            val st = batch.foldLeft(st0) { case (m, (_, _, v, tu)) =>
+              val x = (tu / 1000000L - m.x0).toDouble
               TrendState(m.n + 1, m.x0, m.sx + x, m.sy + v,
                 m.sxx + x * x, m.syy + v * v, m.sxy + x * v)
             }
@@ -673,7 +686,7 @@ object StreamOps {
                 (st.sy - slope * st.sx) / st.n))
             } else Iterator.empty
           }
-      }.toDF()
+      }
   }
 
   /** S18 (r11) — streaming journey transitions: the real-time form of
@@ -701,41 +714,29 @@ object StreamOps {
       events: DataFrame,
       watermark: String = "10 seconds",
       idleGapUs: Long = 3600L * 1000000): DataFrame = {
-    val s = events.sparkSession
-    import s.implicits._
-    events.withWatermark("ts", watermark)
-      .select(col("user_id").cast("long"), col("event_type"),
-        col("event_id").cast("long"), col("ts"))
-      .as[(Long, String, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[(Long, String, Long, java.sql.Timestamp)],
-         state: GroupState[TransitionAnchor]) =>
+    keyedRows[(Long, String, Long, Long)](events, Some(watermark))(
+        col("user_id").cast("long"), col("event_type"),
+        col("event_id").cast("long"), col("ts_us"))
+      .fold(_._1, GroupStateTimeout.EventTimeTimeout) {
+        (uid, rows, state: GroupState[TransitionAnchor]) =>
           if (state.hasTimedOut) {
             state.remove()
             Iterator.empty
           } else {
-            def micros(ts: java.sql.Timestamp): Long =
-              ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
-            val batch = rows.toArray
-              .map(r => (micros(r._4), r._3, r._2))
-              .sortBy(r => (r._1, r._2))
             var anchor = state.getOption.orNull
             val out = Vector.newBuilder[Transition]
-            batch.foreach { case (tsu, eid, et) =>
-              if (anchor != null &&
-                  (tsu > anchor.tsu || (tsu == anchor.tsu && eid > anchor.eventId)))
-                out += Transition(uid, anchor.eventType, et, anchor.tsu, tsu)
-              if (anchor == null || tsu > anchor.tsu ||
-                  (tsu == anchor.tsu && eid > anchor.eventId))
+            rows.toArray.sortBy(r => (r._4, r._3)).foreach { case (_, et, eid, tsu) =>
+              if (anchor == null || !stale(tsu, eid, anchor.tsu, anchor.eventId)) {
+                if (anchor != null)
+                  out += Transition(uid, anchor.eventType, et, anchor.tsu, tsu)
                 anchor = TransitionAnchor(tsu, eid, et)
+              }
             }
             state.update(anchor)
-            state.setTimeoutTimestamp(math.max(anchor.tsu / 1000 + idleGapUs / 1000,
-              state.getCurrentWatermarkMs() + 1))
+            armTimeout(state, anchor.tsu / 1000 + idleGapUs / 1000)
             out.result().iterator
           }
-      }.toDF()
+      }
   }
 
   /** S19 (r11) — streaming last-touch attribution: the real-time form
@@ -762,29 +763,19 @@ object StreamOps {
       conversionType: String = "purchase",
       lookbackUs: Long = 7L * 86400000000L,
       watermark: String = "10 seconds"): DataFrame = {
-    val s = events.sparkSession
-    import s.implicits._
-    events.withWatermark("ts", watermark)
-      .select(col("user_id").cast("long"), col("event_type"),
-        col("event_id").cast("long"), col("ts"))
-      .as[(Long, String, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[(Long, String, Long, java.sql.Timestamp)],
-         state: GroupState[TouchAnchor]) =>
+    keyedRows[(Long, String, Long, Long)](events, Some(watermark))(
+        col("user_id").cast("long"), col("event_type"),
+        col("event_id").cast("long"), col("ts_us"))
+      .fold(_._1, GroupStateTimeout.EventTimeTimeout) {
+        (uid, rows, state: GroupState[TouchAnchor]) =>
           if (state.hasTimedOut) {
             state.remove()
             Iterator.empty
           } else {
-            def micros(ts: java.sql.Timestamp): Long =
-              ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
-            val batch = rows.toArray
-              .map(r => (micros(r._4), r._3, r._2))
-              .sortBy(r => (r._1, r._2))
             var anchor = state.getOption.orNull
             var lastTsu = anchor match { case null => Long.MinValue; case a => a.tsu }
             val out = Vector.newBuilder[Credit]
-            batch.foreach { case (tsu, eid, et) =>
+            rows.toArray.sortBy(r => (r._4, r._3)).foreach { case (_, et, eid, tsu) =>
               if (et == conversionType) {
                 val ch =
                   if (anchor != null && anchor.tsu < tsu &&
@@ -803,29 +794,37 @@ object StreamOps {
             if (anchor != null) state.update(anchor)
             val horizonBase = if (anchor != null) anchor.tsu / 1000
               else state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(math.max(horizonBase + lookbackUs / 1000,
-              state.getCurrentWatermarkMs() + 1))
+            armTimeout(state, horizonBase + lookbackUs / 1000)
             out.result().iterator
           }
-      }.toDF()
+      }
   }
 
+  /** S10 — arbitrary stateful processing on the keyed event-time fold
+    * (SURVEY §2.4's custom-state row — the semantics session_window
+    * can't express: a gap-split session that EMITS each closed session
+    * exactly once, with per-key state the operator owns). Per user:
+    * events extend the open session; a gap > `gapMs` closes it and
+    * emits; an event-time timeout (watermark passing last event + gap)
+    * closes an idle session without needing another event for that key.
+    *
+    * Scale posture: state is one fixed-size record per ACTIVE key (not
+    * per event), keyed-partitioned by user — at 1000 executors each
+    * holds |active users|/1000 records; timeouts evict idle keys so
+    * state does not grow with stream age. Output is Append — safe for
+    * any sink. */
   def statefulSessions(events: DataFrame, gapMs: Long = 30000L,
       watermark: String = "10 seconds"): DataFrame = {
-    val s = events.sparkSession
-    import s.implicits._
-    events.withWatermark("ts", watermark)
-      .select(col("user_id").cast("long"), col("ts"))
-      .as[(Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[(Long, java.sql.Timestamp)],
-         state: GroupState[UserSessionState]) =>
+    keyedRows[(Long, Long)](events, Some(watermark))(
+        col("user_id").cast("long"), col("ts_us"))
+      .fold(_._1, GroupStateTimeout.EventTimeTimeout) {
+        (uid, rows, state: GroupState[UserSessionState]) =>
           if (state.hasTimedOut) {
             val st = state.get; state.remove()
             Iterator.single(ClosedSession(uid, st.nEvents, st.startMs, st.lastMs))
           } else {
-            val times = rows.map(_._2.getTime).toArray.sorted
+            // this machine counts in ms: floorDiv is the µs → ms floor
+            val times = rows.map(r => Math.floorDiv(r._2, 1000L)).toArray.sorted
             var closed = List.empty[ClosedSession]
             var st = state.getOption.orNull
             times.foreach { t =>
@@ -837,14 +836,10 @@ object StreamOps {
                 st = UserSessionState(st.nEvents + 1, math.min(st.startMs, t), t)
             }
             state.update(st)
-            // EventTimeTimeout requires a timestamp beyond the current
-            // watermark; a within-watermark late event could otherwise
-            // compute one behind it
-            state.setTimeoutTimestamp(
-              math.max(st.lastMs + gapMs, state.getCurrentWatermarkMs() + 1))
+            armTimeout(state, st.lastMs + gapMs)
             closed.reverse.iterator
           }
-      }.toDF()
+      }
   }
 
   /** S20 (r11) — streaming cohort retention: the real-time form of the
@@ -874,18 +869,13 @@ object StreamOps {
       horizonDays: Int = 30,
       reorderDays: Int = 7,
       watermark: String = "10 seconds"): DataFrame = {
-    val s = events.sparkSession
-    import s.implicits._
-    events.withWatermark("ts", watermark)
-      .select(col("user_id").cast("long"), col("ts"))
-      .as[(Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[(Long, java.sql.Timestamp)],
-         state: GroupState[RetentionState]) =>
+    keyedRows[(Long, Long)](events, Some(watermark))(
+        col("user_id").cast("long"), col("ts_us"))
+      .fold(_._1, GroupStateTimeout.EventTimeTimeout) {
+        (uid, rows, state: GroupState[RetentionState]) =>
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
           else {
-            val days = rows.map(r => (r._2.getTime / 86400000L).toInt)
+            val days = rows.map(r => (Math.floorDiv(r._2, 1000L) / 86400000L).toInt)
               .toArray.sorted
             var st = state.getOption.getOrElse {
               val c = days.head // first arrival defines the cohort
@@ -905,12 +895,10 @@ object StreamOps {
             }
             state.update(st)
             val lastMs = (st.floorDay.toLong + reorderDays) * 86400000L
-            state.setTimeoutTimestamp(math.max(
-              lastMs + horizonDays.toLong * 86400000L,
-              state.getCurrentWatermarkMs() + 1))
+            armTimeout(state, lastMs + horizonDays.toLong * 86400000L)
             out.result().iterator
           }
-      }.toDF()
+      }
       .select(col("user_id"),
         date_add(lit("1970-01-01").cast("date"), col("cohort_day_ed")).as("cohort_day"),
         date_add(lit("1970-01-01").cast("date"), col("active_day_ed")).as("active_day"),
@@ -1137,23 +1125,15 @@ object StreamOps {
     * aggregation is a stateless windowed agg over these emissions. */
   def conversionLagStream(events: DataFrame, fromType: String,
       toType: String, watermark: String = "10 seconds"): DataFrame = {
-    val s = events.sparkSession
-    import s.implicits._
-    def micros(ts: java.sql.Timestamp): Long =
-      ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
-    events.withWatermark("ts", watermark)
-      .filter(col("event_type").isin(fromType, toType))
-      .select(col("user_id").cast("long"), col("event_type"), col("ts"))
-      .as[(Long, String, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[(Long, String, java.sql.Timestamp)],
-         state: GroupState[ConvState]) =>
+    keyedRows[(Long, String, Long)](events, Some(watermark),
+        where = col("event_type").isin(fromType, toType))(
+        col("user_id").cast("long"), col("event_type"), col("ts_us"))
+      .fold(_._1) { (uid, rows, state: GroupState[ConvState]) =>
           var st = state.getOption.getOrElse(ConvState(-1L, converted = false))
           // event-time order; the from-type wins timestamp ties so a
           // same-instant pair arms then converts (lag 0), like batch ≥
           val evs = rows.toArray
-            .map { case (_, et, ts) => (micros(ts), if (et == fromType) 0 else 1) }
+            .map { case (_, et, tu) => (tu, if (et == fromType) 0 else 1) }
             .sortBy(identity)
           var out = List.empty[ConvHit]
           evs.foreach { case (tm, kind) =>
@@ -1166,7 +1146,7 @@ object StreamOps {
           }
           state.update(st)
           out.reverse.iterator
-      }.toDF()
+      }
   }
 
   /** S31 (r12) — streaming windowed Count-Min frequency estimates for
@@ -1308,32 +1288,19 @@ object StreamOps {
       maxSkip: Int = 3,
       idleGapUs: Long = 7L * 86400000000L,
       watermark: String = "10 seconds"): DataFrame = {
-    val s = events.sparkSession
-    import s.implicits._
-    events.withWatermark("ts", watermark)
-      .select(col("user_id").cast("long"), col("event_type"),
-        col("event_id").cast("long"), col("ts"))
-      .as[(Long, String, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[(Long, String, Long, java.sql.Timestamp)],
-         state: GroupState[SkipRing]) =>
+    keyedRows[(Long, String, Long, Long)](events, Some(watermark))(
+        col("user_id").cast("long"), col("event_type"),
+        col("event_id").cast("long"), col("ts_us"))
+      .fold(_._1, GroupStateTimeout.EventTimeTimeout) {
+        (uid, rows, state: GroupState[SkipRing]) =>
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
           else {
-            def micros(ts: java.sql.Timestamp): Long =
-              ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
-            val batch = rows.toArray
-              .map(r => (micros(r._4), r._3, r._2))
-              .sortBy(r => (r._1, r._2))
             var ring = state.getOption.getOrElse(
               SkipRing(Array.empty, Array.empty, Array.empty))
             val out = Vector.newBuilder[SkipPair]
-            batch.foreach { case (tsu, eid, et) =>
-              val stale = ring.tsus.nonEmpty && {
-                val lastT = ring.tsus.last; val lastE = ring.eids.last
-                tsu < lastT || (tsu == lastT && eid <= lastE)
-              }
-              if (!stale) {
+            rows.toArray.sortBy(r => (r._4, r._3)).foreach { case (_, et, eid, tsu) =>
+              if (ring.tsus.isEmpty ||
+                  !stale(tsu, eid, ring.tsus.last, ring.eids.last)) {
                 var i = 0
                 while (i < ring.types.length) {
                   out += SkipPair(uid, ring.types(i), et, tsu, eid)
@@ -1349,11 +1316,10 @@ object StreamOps {
             state.update(ring)
             val lastMs = if (ring.tsus.isEmpty) state.getCurrentWatermarkMs()
               else ring.tsus.last / 1000
-            state.setTimeoutTimestamp(math.max(lastMs + idleGapUs / 1000,
-              state.getCurrentWatermarkMs() + 1))
+            armTimeout(state, lastMs + idleGapUs / 1000)
             out.result().iterator
           }
-      }.toDF()
+      }
   }
 
   /** S33 (r12) — streaming burst-rate alerts: the real-time edge of
@@ -1390,18 +1356,10 @@ object StreamOps {
     * key costs nothing after its alert. */
   def heartbeatMonitor(events: DataFrame, silenceMs: Long,
       watermark: String = "10 seconds"): DataFrame = {
-    val s = events.sparkSession
-    import s.implicits._
-    def micros(ts: java.sql.Timestamp): Long =
-      ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
-    events.withWatermark("ts", watermark)
-      .select(col("user_id").cast("long"), col("ts"))
-      .as[(Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[(Long, java.sql.Timestamp)],
-         state: GroupState[HbState]) =>
+    keyedRows[(Long, Long)](events, Some(watermark))(
+        col("user_id").cast("long"), col("ts_us"))
+      .fold(_._1, GroupStateTimeout.EventTimeTimeout) {
+        (uid, rows, state: GroupState[HbState]) =>
           if (state.hasTimedOut) {
             val st = state.get
             state.remove()
@@ -1409,18 +1367,14 @@ object StreamOps {
           } else {
             val prev = state.getOption.getOrElse(HbState(Long.MinValue, 0L))
             var last = prev.lastUs; var n = prev.n
-            rows.foreach { case (_, ts) =>
-              val tu = micros(ts); if (tu > last) last = tu; n += 1
-            }
+            rows.foreach { case (_, tu) => if (tu > last) last = tu; n += 1 }
             state.update(HbState(last, n))
-            // fire when event time passes last-seen + silence; clamp
-            // above the current watermark so the timeout is legal even
-            // when this key's last heartbeat is already far behind
-            state.setTimeoutTimestamp(math.max(last / 1000L + silenceMs,
-              state.getCurrentWatermarkMs() + 1))
+            // fire when event time passes last-seen + silence, even when
+            // this key's last heartbeat is already far behind
+            armTimeout(state, last / 1000L + silenceMs)
             Iterator.empty
           }
-      }.toDF()
+      }
   }
 
   /** S35 — per-key streaming EWMA smoother: every event emits its
@@ -1436,25 +1390,16 @@ object StreamOps {
   def ewmaStream(events: DataFrame, alpha: Double,
       watermark: String = "10 seconds"): DataFrame = {
     require(alpha > 0 && alpha <= 1, s"alpha=$alpha outside (0,1]")
-    val s = events.sparkSession
-    import s.implicits._
-    def micros(ts: java.sql.Timestamp): Long =
-      ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
-    events.withWatermark("ts", watermark)
-      .select(col("user_id").cast("long"), col("ts"),
+    keyedRows[(Long, Long, Long, Double)](events, Some(watermark))(
+        col("user_id").cast("long"), col("ts_us"),
         col("event_id").cast("long"), col("value").cast("double"))
-      .as[(Long, java.sql.Timestamp, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, Double)],
-         state: GroupState[EwmaState]) =>
+      .fold(_._1) { (uid, rows, state: GroupState[EwmaState]) =>
           var st = state.getOption.getOrElse(
             EwmaState(Long.MinValue, Long.MinValue, 0.0))
           val out = rows.toSeq
-            .map { case (_, ts, id, v) => (micros(ts), id, v) }
-            .sortBy { case (tu, id, _) => (tu, id) }
-            .flatMap { case (tu, id, v) =>
-              if (tu < st.tsu || (tu == st.tsu && id <= st.eventId)) None // regression: drop
+            .sortBy { case (_, tu, id, _) => (tu, id) }
+            .flatMap { case (_, tu, id, v) =>
+              if (stale(tu, id, st.tsu, st.eventId)) None // regression: drop
               else {
                 val lvl = if (st.tsu == Long.MinValue) v
                           else alpha * v + (1 - alpha) * st.level
@@ -1464,7 +1409,7 @@ object StreamOps {
             }
           state.update(st)
           out.iterator
-      }.toDF()
+      }
   }
 
   /** S36 — streaming CUSUM changepoint alarm (Page 1954; q195 is the
@@ -1483,25 +1428,16 @@ object StreamOps {
     // threshold un-reset (mirrors ewmaStream's alpha domain check).
     require(slack >= 0, s"slack=$slack must be >= 0")
     require(threshold > 0, s"threshold=$threshold must be > 0")
-    val s = events.sparkSession
-    import s.implicits._
-    def micros(ts: java.sql.Timestamp): Long =
-      ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
-    events.withWatermark("ts", watermark)
-      .select(col("user_id").cast("long"), col("ts"),
+    keyedRows[(Long, Long, Long, Double)](events, Some(watermark))(
+        col("user_id").cast("long"), col("ts_us"),
         col("event_id").cast("long"), col("value").cast("double"))
-      .as[(Long, java.sql.Timestamp, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, Double)],
-         state: GroupState[CusumState]) =>
+      .fold(_._1) { (uid, rows, state: GroupState[CusumState]) =>
           var st = state.getOption.getOrElse(
             CusumState(Long.MinValue, Long.MinValue, 0.0, 0.0))
           val out = rows.toSeq
-            .map { case (_, ts, id, v) => (micros(ts), id, v) }
-            .sortBy { case (tu, id, _) => (tu, id) }
-            .flatMap { case (tu, id, v) =>
-              if (tu < st.tsu || (tu == st.tsu && id <= st.eventId)) None
+            .sortBy { case (_, tu, id, _) => (tu, id) }
+            .flatMap { case (_, tu, id, v) =>
+              if (stale(tu, id, st.tsu, st.eventId)) None
               else {
                 var sp = math.max(0.0, st.sPos + (v - mu0 - slack))
                 var sn = math.max(0.0, st.sNeg + (mu0 - v - slack))
@@ -1517,7 +1453,7 @@ object StreamOps {
             }
           state.update(st)
           out.iterator
-      }.toDF()
+      }
   }
 
   /** Deterministic 64-bit mix (splitmix64 finalizer) — the S37 sample
@@ -1546,15 +1482,10 @@ object StreamOps {
     * (Update mode). Parity: after any prefix, the sample equals the
     * batch bottom-k over the same ids (pinned in StreamingSpec). */
   def reservoirStream(events: DataFrame, k: Int): DataFrame = {
-    val s = events.sparkSession
-    import s.implicits._
-    events
-      .select(col("event_type"), col("event_id").cast("long"))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (grp: String, rows: Iterator[(String, Long)],
-         state: GroupState[ReservoirState]) =>
+    keyedRows[(String, Long)](events, None)(
+        col("event_type"), col("event_id").cast("long"))
+      .fold(_._1, mode = OutputMode.Update) {
+        (grp, rows, state: GroupState[ReservoirState]) =>
           val prev = state.getOption.getOrElse(
             ReservoirState(Array.empty, Array.empty, 0L))
           var n = prev.n
@@ -1574,7 +1505,7 @@ object StreamOps {
             Iterator.single(ReservoirSample(grp, n,
               kept.sortBy(_._2).map(_._2)))
           else Iterator.empty
-      }.toDF()
+      }
   }
 
   /** S38 — streaming CDC upsert materializer (the Kafka
@@ -1599,12 +1530,8 @@ object StreamOps {
   def cdcUpsertStream(changes: DataFrame,
       tombstoneRetentionUs: Option[Long] = None,
       watermark: String = "10 seconds"): DataFrame = {
-    val s = changes.sparkSession
-    import s.implicits._
     def rank(op: String): Int =
       op match { case "D" => 3; case "U" => 2; case _ => 1 }
-    def micros(ts: java.sql.Timestamp): Long =
-      ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
     // Tombstone GC (r14 verdict #5): a compacted topic's state is the
     // LIVE keyspace — Kafka itself deletes tombstones past
     // `delete.retention.ms`. With `tombstoneRetentionUs` set, the
@@ -1621,20 +1548,18 @@ object StreamOps {
     // the absorb-late guarantee's boundary. Default None keeps the
     // infinite-retention materialization (a compacted topic IS a
     // keyspace-sized state by semantics).
-    val timeoutConf = if (tombstoneRetentionUs.isDefined)
-      GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-    val base = changes.select(col("k").cast("long"), col("op"),
-      col("version").cast("long"), col("payload"),
-      if (tombstoneRetentionUs.isDefined) col("ts")
-      else lit(null).cast("timestamp").as("ts"))
-    val src = if (tombstoneRetentionUs.isDefined)
-      base.withWatermark("ts", watermark) else base
-    src
-      .as[(Long, String, Long, String, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update, timeoutConf) {
-        (k: Long, rows: Iterator[(Long, String, Long, String, java.sql.Timestamp)],
-         state: GroupState[CdcState]) =>
+    // A change without event time (no retention, or a null ts) carries
+    // Long.MinValue: it never arms the GC timer. The µs column stays
+    // the bare, nullable `ts_us` (decoded as an Option): a coalesce over
+    // it would drop the watermark the event-time timeout requires.
+    val retained = tombstoneRetentionUs.isDefined
+    keyedRows[(Long, String, Long, String, Option[Long])](changes,
+        tombstoneRetentionUs.map(_ => watermark))(
+        col("k").cast("long"), col("op"), col("version").cast("long"),
+        col("payload"), if (retained) col("ts_us") else lit(null).cast("long"))
+      .fold(_._1, if (retained) GroupStateTimeout.EventTimeTimeout
+          else GroupStateTimeout.NoTimeout, OutputMode.Update) {
+        (k, rows, state: GroupState[CdcState]) =>
           if (state.hasTimedOut) {
             // retention passed with the tombstone still the winner:
             // drop the key (the tombstone row was already emitted)
@@ -1649,9 +1574,8 @@ object StreamOps {
             // it, never from absorbed rows, so a late lower-version
             // change cannot extend the eviction horizon
             val ord = Ordering.Tuple3[Long, Int, String]
-            val best = rows.foldLeft(prev) { case (acc, (_, op, v, p, ts)) =>
-              val tsUs = if (ts != null) micros(ts) else Long.MinValue
-              val cand = CdcState(v, rank(op), op, p, tsUs)
+            val best = rows.foldLeft(prev) { case (acc, (_, op, v, p, tsUs)) =>
+              val cand = CdcState(v, rank(op), op, p, tsUs.getOrElse(Long.MinValue))
               Some(acc.fold(cand) { a =>
                 val c = ord.compare((cand.version, cand.opRank, cand.payload),
                   (a.version, a.opRank, a.payload))
@@ -1675,14 +1599,12 @@ object StreamOps {
             // quiet keys keep their armed timestamp between batches
             (best, tombstoneRetentionUs) match {
               case (Some(w), Some(ret)) if w.op == "D" && w.tsUs != Long.MinValue =>
-                state.setTimeoutTimestamp(
-                  math.max(w.tsUs / 1000 + ret / 1000,
-                    state.getCurrentWatermarkMs() + 1))
+                armTimeout(state, w.tsUs / 1000 + ret / 1000)
               case _ => ()
             }
             out
           }
-      }.toDF()
+      }
   }
 
   /** S39 — streaming geofence transitions (the real-time form of the
@@ -1774,21 +1696,13 @@ object StreamOps {
       watermark: String = "10 seconds",
       idleGapUs: Option[Long] = None): DataFrame = {
     require(vMax > 0, s"vMax=$vMax must be positive")
-    val s = events.sparkSession
-    import s.implicits._
-    def micros(ts: java.sql.Timestamp): Long =
-      ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
-    val timeoutConf = if (idleGapUs.isDefined)
-      GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-    events.withWatermark("ts", watermark)
-      .select(col("user_id").cast("long"), col("ts"),
+    keyedRows[(Long, Long, Long, Long, Long)](events, Some(watermark))(
+        col("user_id").cast("long"), col("ts_us"),
         col("event_id").cast("long"),
         col("la").cast("long"), col("lo").cast("long"))
-      .as[(Long, java.sql.Timestamp, Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf) {
-        (uid: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, Long, Long)],
-         state: GroupState[SpeedState]) =>
+      .fold(_._1, if (idleGapUs.isDefined) GroupStateTimeout.EventTimeTimeout
+          else GroupStateTimeout.NoTimeout) {
+        (uid, rows, state: GroupState[SpeedState]) =>
           if (state.hasTimedOut) {
             state.remove()
             Iterator.empty
@@ -1796,12 +1710,11 @@ object StreamOps {
             var st = state.getOption.orNull
             val out = scala.collection.mutable.ArrayBuffer.empty[SpeedAlert]
             rows.toSeq
-              .map { case (_, ts, eid, la, lo) =>
-                (Math.floorDiv(micros(ts), 1000000L), eid, la, lo) }
+              .map { case (_, tu, eid, la, lo) =>
+                (Math.floorDiv(tu, 1000000L), eid, la, lo) }
               .sortBy { case (t, eid, _, _) => (t, eid) }
               .foreach { case (t, eid, la, lo) =>
-                if (st != null &&
-                    (t < st.tsu || (t == st.tsu && eid <= st.eid))) {
+                if (st != null && stale(t, eid, st.tsu, st.eid)) {
                   // straggler below the anchor: dropped
                 } else {
                   if (st != null) {
@@ -1816,15 +1729,11 @@ object StreamOps {
               }
             if (st != null) {
               state.update(st)
-              idleGapUs.foreach { gap =>
-                state.setTimeoutTimestamp(math.max(
-                  st.tsu * 1000L + gap / 1000L,
-                  state.getCurrentWatermarkMs() + 1L))
-              }
+              idleGapUs.foreach(gap => armTimeout(state, st.tsu * 1000L + gap / 1000L))
             }
             out.iterator
           }
-      }.toDF()
+      }
   }
 
   /** S48 — streaming trajectory resampling: the live q265
@@ -1854,21 +1763,13 @@ object StreamOps {
       idleGapUs: Long = 3600L * 1000000L): DataFrame = {
     require(gridSeconds > 0 && idleGapUs > 0,
       s"gridSeconds=$gridSeconds idleGapUs=$idleGapUs must be positive")
-    val s = events.sparkSession
-    import s.implicits._
     val G = gridSeconds
-    def micros(ts: java.sql.Timestamp): Long =
-      ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
-    events.withWatermark("ts", watermark)
-      .select(col("user_id").cast("long"), col("ts"),
+    keyedRows[(Long, Long, Long, Long, Long)](events, Some(watermark))(
+        col("user_id").cast("long"), col("ts_us"),
         col("event_id").cast("long"),
         col("la").cast("long"), col("lo").cast("long"))
-      .as[(Long, java.sql.Timestamp, Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, Long, Long)],
-         state: GroupState[ResampleState]) =>
+      .fold(_._1, GroupStateTimeout.EventTimeTimeout) {
+        (uid, rows, state: GroupState[ResampleState]) =>
           val out = scala.collection.mutable.ArrayBuffer.empty[GridPoint]
           if (state.hasTimedOut) {
             val st = state.get
@@ -1879,15 +1780,15 @@ object StreamOps {
           } else {
             var st = state.getOption.orNull
             rows.toSeq
-              .map { case (_, ts, eid, la, lo) =>
-                (Math.floorDiv(micros(ts), 1000000L), eid,
+              .map { case (_, tu, eid, la, lo) =>
+                (Math.floorDiv(tu, 1000000L), eid,
                   la + 90000000L, lo + 180000000L) }
               .sortBy { case (t, eid, _, _) => (t, eid) }
               .foreach { case (t, eid, las, los) =>
                 if (st == null)
                   st = ResampleState(t, eid, las, los,
                     ((t + G - 1L) / G) * G - G) // g0 − G: nothing emitted yet
-                else if (t < st.tu || (t == st.tu && eid <= st.eid)) {
+                else if (stale(t, eid, st.tu, st.eid)) {
                   // cross-batch straggler below the anchor: dropped
                 } else if (t == st.tu) {
                   // same second, higher event_id: the hit-candidate
@@ -1916,13 +1817,11 @@ object StreamOps {
               }
             if (st != null) {
               state.update(st)
-              state.setTimeoutTimestamp(math.max(
-                st.tu * 1000L + idleGapUs / 1000L,
-                state.getCurrentWatermarkMs() + 1L))
+              armTimeout(state, st.tu * 1000L + idleGapUs / 1000L)
             }
           }
           out.iterator
-      }.toDF()
+      }
   }
 
   /** S47 — streaming geo BURST detection (emerging-hotspot alerts):
@@ -1961,22 +1860,14 @@ object StreamOps {
     require(windowSeconds > 0 && mult >= 1 && warmup >= 1 && minCount >= 1 &&
       idleGapUs > 0,
       s"bad params: win=$windowSeconds mult=$mult warmup=$warmup gap=$idleGapUs")
-    val s = events.sparkSession
-    import s.implicits._
     val winUs = windowSeconds * 1000000L
     val wide = 360000000L / resMicroDeg + 1L
-    def micros(ts: java.sql.Timestamp): Long =
-      ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
-    events.withWatermark("ts", watermark)
-      .select(expr(s"((la + 90000000) DIV $resMicroDeg) * $wide + " +
+    keyedRows[(Long, Long)](events, Some(watermark))(
+        expr(s"((la + 90000000) DIV $resMicroDeg) * $wide + " +
           s"(lo + 180000000) DIV $resMicroDeg").as("cell"),
-        col("ts"))
-      .as[(Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (cell: Long, rows: Iterator[(Long, java.sql.Timestamp)],
-         state: GroupState[BurstState]) =>
+        col("ts_us"))
+      .fold(_._1, GroupStateTimeout.EventTimeTimeout) {
+        (cell, rows, state: GroupState[BurstState]) =>
           val out = scala.collection.mutable.ArrayBuffer.empty[BurstAlert]
           val wmUs = state.getCurrentWatermarkMs() * 1000L
           // sweep: close every window whose end the watermark passed,
@@ -2008,7 +1899,7 @@ object StreamOps {
           }
           var st = state.getOption.orNull
           if (!state.hasTimedOut) {
-            val evs = rows.map { case (_, ts) => micros(ts) }.toArray
+            val evs = rows.map(_._2).toArray
             if (st == null && evs.nonEmpty)
               st = BurstState(evs.min / winUs - 1L, 0L, 0L, Long.MinValue,
                 Array.empty, Array.empty)
@@ -2040,12 +1931,11 @@ object StreamOps {
               val nextUs =
                 if (st.ws.nonEmpty) (st.ws.min + 1L) * winUs
                 else st.lastSeenUs + idleGapUs
-              state.setTimeoutTimestamp(math.max(nextUs / 1000L,
-                state.getCurrentWatermarkMs() + 1L))
+              armTimeout(state, nextUs / 1000L)
             }
           }
           out.iterator
-      }.toDF()
+      }
   }
 
   /** S46 — streaming zone DWELL visits: the live form of q258
@@ -2081,58 +1971,56 @@ object StreamOps {
       idleGapUs: Long = 3600L * 1000000L): DataFrame = {
     require(zones.nonEmpty, "zones must be non-empty")
     require(idleGapUs > 0, s"idleGapUs=$idleGapUs must be positive")
-    val resolved = graft.operators.Geo.resolveCircleZones(events, zones)
-    val s = events.sparkSession
-    import s.implicits._
-    def micros(ts: java.sql.Timestamp): Long =
-      ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
-    resolved.withWatermark("ts", watermark)
-      .select(col("user_id").cast("long"), col("ts"),
+    keyedRows[(Long, Long, Long, String)](
+        graft.operators.Geo.resolveCircleZones(events, zones), Some(watermark))(
+        col("user_id").cast("long"), col("ts_us"),
         col("event_id").cast("long"), col("zone"))
-      .as[(Long, java.sql.Timestamp, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, String)],
-         state: GroupState[DwellState]) =>
-          if (state.hasTimedOut) {
-            val st = state.get
-            state.remove()
-            if (st.zone != "outside")
-              Iterator.single(DwellVisit(uid, st.zone, st.enterUs,
-                st.lastUs, st.n))
-            else Iterator.empty
-          } else {
-            var stOpt = state.getOption
-            val out = scala.collection.mutable.ArrayBuffer.empty[DwellVisit]
-            rows.toSeq
-              .map { case (_, ts, id, z) => (micros(ts), id, z) }
-              .sortBy { case (tu, id, _) => (tu, id) }
-              .foreach { case (tu, id, z) =>
-                stOpt match {
-                  case Some(st) if tu < st.lastUs ||
-                      (tu == st.lastUs && id <= st.lastEvent) => () // straggler
-                  case Some(st) if st.zone == z =>
-                    stOpt = Some(st.copy(lastUs = tu, lastEvent = id,
-                      n = st.n + 1))
-                  case Some(st) =>
-                    if (st.zone != "outside")
-                      out += DwellVisit(uid, st.zone, st.enterUs, st.lastUs, st.n)
-                    stOpt = Some(DwellState(z, tu, tu, id, 1L))
-                  case None =>
-                    stOpt = Some(DwellState(z, tu, tu, id, 1L))
-                }
-              }
-            stOpt.foreach { st =>
-              state.update(st)
-              state.setTimeoutTimestamp(math.max(
-                st.lastUs / 1000 + idleGapUs / 1000,
-                state.getCurrentWatermarkMs() + 1))
-            }
-            out.iterator
-          }
-      }.toDF()
+      .fold(_._1, GroupStateTimeout.EventTimeTimeout) {
+        (uid, rows, state: GroupState[DwellState]) =>
+          dwellRuns(uid, byEventTime(rows), state, idleGapUs)
+      }
   }
+
+  /** A resolved-zone machine's events — (ts_us, event_id, zone) — in
+    * the (ts_us, event_id) fold order. */
+  private def byEventTime(rows: Iterator[(Long, Long, Long, String)])
+      : Seq[(Long, Long, String)] =
+    rows.toSeq.map { case (_, tu, id, z) => (tu, id, z) }
+      .sortBy { case (tu, id, _) => (tu, id) }
+
+  /** The S46 run machine (S46 and S50): `evs` in (ts_us, event_id)
+    * order extend or close the user's zone run; a closed in-zone run,
+    * or one the idle timeout ends, emits its visit. */
+  private def dwellRuns(uid: Long, evs: Seq[(Long, Long, String)],
+      state: GroupState[DwellState], idleGapUs: Long): Iterator[DwellVisit] =
+    if (state.hasTimedOut) {
+      val st = state.get
+      state.remove()
+      if (st.zone != "outside")
+        Iterator.single(DwellVisit(uid, st.zone, st.enterUs, st.lastUs, st.n))
+      else Iterator.empty
+    } else {
+      var stOpt = state.getOption
+      val out = scala.collection.mutable.ArrayBuffer.empty[DwellVisit]
+      evs.foreach { case (tu, id, z) =>
+        stOpt match {
+          case Some(st) if stale(tu, id, st.lastUs, st.lastEvent) => () // straggler
+          case Some(st) if st.zone == z =>
+            stOpt = Some(st.copy(lastUs = tu, lastEvent = id, n = st.n + 1))
+          case Some(st) =>
+            if (st.zone != "outside")
+              out += DwellVisit(uid, st.zone, st.enterUs, st.lastUs, st.n)
+            stOpt = Some(DwellState(z, tu, tu, id, 1L))
+          case None =>
+            stOpt = Some(DwellState(z, tu, tu, id, 1L))
+        }
+      }
+      stOpt.foreach { st =>
+        state.update(st)
+        armTimeout(state, st.lastUs / 1000 + idleGapUs / 1000)
+      }
+      out.iterator
+    }
 
   /** Shared S39 state machine over a resolved-zone column.
     *
@@ -2157,49 +2045,41 @@ object StreamOps {
     * `zone` column (lets multi-Project resolvers like the spherical
     * layers stay layered instead of collapsing into one giant CASE). */
   private def geofenceResolved(events: DataFrame,
-      watermark: String, idleGapUs: Option[Long]): DataFrame = {
-    val s = events.sparkSession
-    import s.implicits._
-    def micros(ts: java.sql.Timestamp): Long =
-      ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
-    val timeoutConf = if (idleGapUs.isDefined)
-      GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-    events.withWatermark("ts", watermark)
-      .select(col("user_id").cast("long"), col("ts"),
+      watermark: String, idleGapUs: Option[Long]): DataFrame =
+    keyedRows[(Long, Long, Long, String)](events, Some(watermark))(
+        col("user_id").cast("long"), col("ts_us"),
         col("event_id").cast("long"), col("zone"))
-      .as[(Long, java.sql.Timestamp, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf) {
-        (uid: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, String)],
-         state: GroupState[GeoState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var st = state.getOption.getOrElse(
-              GeoState(Long.MinValue, Long.MinValue, "outside"))
-            val out = rows.toSeq
-              .map { case (_, ts, id, z) => (micros(ts), id, z) }
-              .sortBy { case (tu, id, _) => (tu, id) }
-              .flatMap { case (tu, id, z) =>
-                if (tu < st.tsu || (tu == st.tsu && id <= st.eventId)) None
-                else {
-                  val from = st.zone
-                  st = GeoState(tu, id, z)
-                  if (z != from) Some(GeoTransition(uid, tu, id, from, z))
-                  else None
-                }
-              }
-            state.update(st)
-            idleGapUs.foreach { gap =>
-              if (st.tsu != Long.MinValue)
-                state.setTimeoutTimestamp(math.max(st.tsu / 1000 + gap / 1000,
-                  state.getCurrentWatermarkMs() + 1))
-            }
-            out.iterator
-          }
-      }.toDF()
-  }
+      .fold(_._1, if (idleGapUs.isDefined) GroupStateTimeout.EventTimeTimeout
+          else GroupStateTimeout.NoTimeout) {
+        (uid, rows, state: GroupState[GeoState]) =>
+          geoTransitions(uid, byEventTime(rows), state, idleGapUs)
+      }
+
+  /** The S39 transition step (S39/S43 and S45): `evs` in (ts_us,
+    * event_id) order emit a transition whenever the zone changes;
+    * stragglers at or behind the anchor drop. */
+  private def geoTransitions(uid: Long, evs: Seq[(Long, Long, String)],
+      state: GroupState[GeoState], idleGapUs: Option[Long]): Iterator[GeoTransition] =
+    if (state.hasTimedOut) {
+      state.remove()
+      Iterator.empty
+    } else {
+      var st = state.getOption.getOrElse(
+        GeoState(Long.MinValue, Long.MinValue, "outside"))
+      val out = evs.flatMap { case (tu, id, z) =>
+        if (stale(tu, id, st.tsu, st.eventId)) None
+        else {
+          val from = st.zone
+          st = GeoState(tu, id, z)
+          if (z != from) Some(GeoTransition(uid, tu, id, from, z)) else None
+        }
+      }
+      state.update(st)
+      idleGapUs.foreach { gap =>
+        if (st.tsu != Long.MinValue) armTimeout(state, st.tsu / 1000 + gap / 1000)
+      }
+      out.iterator
+    }
 
   /** S40 — streaming interval union (the live form of q248
     * `Relational.intervalUnion`, under the S38/q245 batch-parity
@@ -2231,63 +2111,11 @@ object StreamOps {
     * EventTimeTimeout re-arms at the earliest open end so quiet keys
     * still close without new traffic. */
   def intervalUnionStream(iv: DataFrame,
-      watermark: String = "10 seconds"): DataFrame = {
-    val s = iv.sparkSession
-    import s.implicits._
-    iv.withWatermark("ts", watermark)
-      .select(col("user_id").cast("long"), col("ts"),
-        col("s").cast("long"), col("e").cast("long"))
-      .as[(Long, java.sql.Timestamp, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, Long)],
-         state: GroupState[IntervalState]) =>
-          val prev = state.getOption.getOrElse(
-            IntervalState(Array.empty, Array.empty, Array.empty, Array.empty,
-              Long.MinValue))
-          // items = open blocks ∪ new intervals (inverted fails fast,
-          // pre-frontier late arrivals dropped)
-          val fresh = rows.map { case (_, _, is, ie) =>
-            require(is <= ie, s"intervalUnionStream: inverted interval " +
-              s"e=$ie < s=$is for key $uid")
-            (is, ie, 1L, ie - is)
-          }.filter { case (is, _, _, _) =>
-            // strict: a non-late row always has s > closedUntil (the
-            // frontier closed only once the watermark passed it); a
-            // late s == closedUntil row would have TOUCH-merged into
-            // the closed block in batch — emitting it as a new block
-            // would break parity, so it drops with the other late rows
-            prev.closedUntil == Long.MinValue || is > prev.closedUntil
-          }.toArray
-          val items = (prev.bs.indices.map(i =>
-              (prev.bs(i), prev.be(i), prev.n(i), prev.raw(i))) ++ fresh)
-            .sortBy(t => (t._1, t._2))
-          // the batch running-max sweep
-          val merged = Vector.newBuilder[(Long, Long, Long, Long)]
-          var cur: (Long, Long, Long, Long) = null
-          items.foreach { case it @ (is, ie, in, ir) =>
-            if (cur == null) cur = it
-            else if (is > cur._2) { merged += cur; cur = it }
-            else cur = (cur._1, math.max(cur._2, ie), cur._3 + in, cur._4 + ir)
-          }
-          if (cur != null) merged += cur
-          val wmMs = state.getCurrentWatermarkMs()
-          val (closed, open) = merged.result().partition(_._2 * 1000 < wmMs)
-          val newClosedUntil = (prev.closedUntil +:
-            closed.map(_._2)).max
-          if (open.isEmpty) state.remove()
-          else {
-            state.update(IntervalState(open.map(_._1).toArray,
-              open.map(_._2).toArray, open.map(_._3).toArray,
-              open.map(_._4).toArray, newClosedUntil))
-            state.setTimeoutTimestamp(
-              math.max(open.map(_._2).min * 1000 + 1, wmMs + 1))
-          }
-          closed.sortBy(_._1).map { case (bs, be, n, raw) =>
-            ClosedBlock(uid, bs, be, n, be - bs, raw)
-          }.iterator
-      }.toDF()
-  }
+      watermark: String = "10 seconds"): DataFrame =
+    intervalBlocks(iv, watermark, "intervalUnionStream", keepFrontier = false) {
+      (uid, _, closed) => closed.map { case (bs, be, n, raw) =>
+        ClosedBlock(uid, bs, be, n, be - bs, raw) }.iterator
+    }
 
   /** S42 — streaming interval GAPS (the live q254
     * `Relational.intervalGaps`, S40's complement): a downtime window
@@ -2310,91 +2138,88 @@ object StreamOps {
     * operator's LAG carries, bounded by distinct keys, never stream
     * age — and a resumed key's first closed block pairs against it. */
   def intervalGapsStream(iv: DataFrame,
-      watermark: String = "10 seconds"): DataFrame = {
-    val s = iv.sparkSession
-    import s.implicits._
-    iv.withWatermark("ts", watermark)
-      .select(col("user_id").cast("long"), col("ts"),
+      watermark: String = "10 seconds"): DataFrame =
+    intervalBlocks(iv, watermark, "intervalGapsStream", keepFrontier = true) {
+      (uid, prevUntil, cs) =>
+        // every closed block's START finalizes the gap behind it: pair
+        // each closed start with the end before it (the prior frontier,
+        // or the previous closed block in this batch); the key's FIRST
+        // block has nothing behind it
+        val starts = if (prevUntil == Long.MinValue)
+          cs.drop(1).map(_._1) else cs.map(_._1)
+        val ends = if (prevUntil == Long.MinValue)
+          cs.map(_._2) else prevUntil +: cs.map(_._2)
+        starts.zip(ends).collect {
+          case (gs, pe) if gs > pe => GapRow(uid, pe, gs, gs - pe)
+        }.iterator
+    }
+
+  /** The S40/S42 block machine: per key, open blocks ∪ the batch's
+    * intervals (inverted fails fast; at-or-before-frontier rows drop)
+    * merge by the batch running-max sweep; blocks whose end the
+    * watermark passed close, and `emit` gets (key, prior frontier,
+    * closed blocks by start) as (bs, be, n, raw). With no open block
+    * left the key is removed, or with `keepFrontier` keeps a
+    * frontier-only state (no timeout: it is re-entered only when the
+    * key resumes); open blocks re-arm at the earliest open end. The
+    * row keeps `ts_us`, unread by the sweep, because the watermark's
+    * late-row filter reads it. */
+  private def intervalBlocks[O: Encoder](iv: DataFrame, watermark: String,
+      op: String, keepFrontier: Boolean)(
+      emit: (Long, Long, Vector[(Long, Long, Long, Long)]) => Iterator[O]): DataFrame =
+    keyedRows[(Long, Long, Long, Long)](iv, Some(watermark))(
+        col("user_id").cast("long"), col("ts_us"),
         col("s").cast("long"), col("e").cast("long"))
-      .as[(Long, java.sql.Timestamp, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, Long)],
-         state: GroupState[IntervalState]) =>
+      .fold(_._1, GroupStateTimeout.EventTimeTimeout) {
+        (uid, rows, state: GroupState[IntervalState]) =>
           val prev = state.getOption.getOrElse(
             IntervalState(Array.empty, Array.empty, Array.empty, Array.empty,
               Long.MinValue))
           val fresh = rows.map { case (_, _, is, ie) =>
-            require(is <= ie, s"intervalGapsStream: inverted interval " +
+            require(is <= ie, s"$op: inverted interval " +
               s"e=$ie < s=$is for key $uid")
             (is, ie, 1L, ie - is)
           }.filter { case (is, _, _, _) =>
+            // strict: a non-late row always has s > closedUntil (the
+            // frontier closed only once the watermark passed it); a
+            // late s == closedUntil row would have TOUCH-merged into
+            // the closed block in batch — emitting it as a new block
+            // would break parity, so it drops with the other late rows
             prev.closedUntil == Long.MinValue || is > prev.closedUntil
           }.toArray
           val items = (prev.bs.indices.map(i =>
               (prev.bs(i), prev.be(i), prev.n(i), prev.raw(i))) ++ fresh)
             .sortBy(t => (t._1, t._2))
+          // the batch running-max sweep
           val merged = Vector.newBuilder[(Long, Long, Long, Long)]
           var cur: (Long, Long, Long, Long) = null
-          items.foreach { case it @ (is, ie, _, _) =>
+          items.foreach { case it @ (is, ie, in, ir) =>
             if (cur == null) cur = it
             else if (is > cur._2) { merged += cur; cur = it }
-            else cur = (cur._1, math.max(cur._2, ie), cur._3 + it._3,
-              cur._4 + it._4)
+            else cur = (cur._1, math.max(cur._2, ie), cur._3 + in, cur._4 + ir)
           }
           if (cur != null) merged += cur
-          val wmMs = state.getCurrentWatermarkMs()
-          val (closed, open) = merged.result().partition(_._2 * 1000 < wmMs)
-          val newClosedUntil = (prev.closedUntil +: closed.map(_._2)).max
-          // frontier-only state when idle (see scaladoc): no timeout —
-          // the state IS the long-retention record, re-entered only
-          // when the key resumes
-          state.update(IntervalState(open.map(_._1).toArray,
-            open.map(_._2).toArray, open.map(_._3).toArray,
-            open.map(_._4).toArray, newClosedUntil))
-          if (open.nonEmpty)
-            state.setTimeoutTimestamp(
-              math.max(open.map(_._2).min * 1000 + 1, wmMs + 1))
-          // every closed block's START finalizes the gap behind it:
-          // pair each closed start with the end before it (the prior
-          // frontier, or the previous closed block in this batch); the
-          // key's FIRST block has nothing behind it
-          val cs = closed.sortBy(_._1)
-          val starts = if (prev.closedUntil == Long.MinValue)
-            cs.drop(1).map(_._1) else cs.map(_._1)
-          val ends = if (prev.closedUntil == Long.MinValue)
-            cs.map(_._2) else prev.closedUntil +: cs.map(_._2)
-          starts.zip(ends).collect {
-            case (gs, pe) if gs > pe => GapRow(uid, pe, gs, gs - pe)
-          }.iterator
-      }.toDF()
-  }
+          val (closed, open) = merged.result()
+            .partition(_._2 * 1000 < state.getCurrentWatermarkMs())
+          if (open.isEmpty && !keepFrontier) state.remove()
+          else {
+            state.update(IntervalState(open.map(_._1).toArray,
+              open.map(_._2).toArray, open.map(_._3).toArray,
+              open.map(_._4).toArray, (prev.closedUntil +: closed.map(_._2)).max))
+            if (open.nonEmpty) armTimeout(state, open.map(_._2).min * 1000 + 1)
+          }
+          emit(uid, prev.closedUntil, closed.sortBy(_._1))
+      }
 
-  /** S45 — ZONE-SCALE streaming geofence transitions: S43 with the
-    * zones as a DATAFRAME routed through the q256 banded grid — the
-    * implemented form of the S43 cutover guidance (a literal zone
-    * list compiles one plan column set per zone; 10³+ geofences need
-    * zones as data). Events explode onto their deduplicated 3×3 grid
-    * neighborhood and LEFT-join the static zone-cell table (a
-    * stream-static join — stateless, so it legally precedes the one
-    * stateful operator); per event, the state function resolves the
-    * NEAREST qualifying zone by the bit-stable (hav, zone_id) order
-    * using [[graft.operators.Geo.havScala]]/kzScala — the identical
-    * float ops as the batch q260 rank — and feeds the S39/S43
-    * transition machine (first event enters from "outside"; zone
-    * names are the zone_id rendered as a string). Unmatched events
-    * keep one null-zone row per exploded key, so "outside" resolution
-    * needs no second join. State: last zone + the order anchor per
-    * user — constant; parity with the batch resolution is pinned in
-    * the golden. */
   /** The S45/S50 candidate stage: events exploded onto their
     * deduplicated 3×3 banded-grid neighborhood, LEFT-joined to the
     * persisted static zone-cell table — one row per (event, candidate
-    * zone), "left" rows carrying None so zone-less events survive. */
-  private def zoneResolvedCandidates(events: DataFrame, zones: DataFrame,
+    * zone), "left" rows carrying None so zone-less events survive —
+    * as (ts_us, user_id, event_id, la, lo, zone_id, zla, zlo, radius),
+    * keyed by user. */
+  private def zoneCandidates(events: DataFrame, zones: DataFrame,
       maxRadiusMeters: Double, watermark: String, opName: String)
-      : org.apache.spark.sql.Dataset[(java.sql.Timestamp, Long, Long, Long,
-        Long, Option[Long], Option[Long], Option[Long], Option[Double])] = {
+      : KeyedRows[ZoneCandidate] = {
     val s = events.sparkSession
     import s.implicits._
     val (h, cells, wMax) = graft.operators.Geo.gridParams(maxRadiusMeters)
@@ -2415,7 +2240,7 @@ object StreamOps {
         col("zband"), expr("((lob + 180000000) * bt_nc) DIV 360000000").as("zcell"))
       .persist()
     z.count()
-    val pre = events.withWatermark("ts", watermark)
+    val pre = events
       .select(col("ts"), col("user_id").cast("long").as("user_id"),
         col("event_id").cast("long").as("event_id"),
         col("la").cast("long").as("la"), col("lo").cast("long").as("lo"))
@@ -2427,63 +2252,61 @@ object StreamOps {
       .withColumn("gcell", explode(array_distinct(
         transform(array(lit(-1L), lit(0L), lit(1L)),
           dc => pmod(col("cellT0") + dc, col("ncT"))))))
-    pre.join(z,
+    val joined = pre.join(z,
         pre("tb") === z("zband") && pre("gcell") === z("zcell") &&
           abs(pre("la") - z("lb")) <= h &&
           expr("abs(((lo - lob + 540000000) % 360000000) - 180000000)") <= wMax,
         "left_outer")
-      .select(col("ts"), col("user_id"), col("event_id"), col("la"), col("lo"),
-        col("zone_id"), col("lb"), col("lob"), col("radius_m"))
-      .as[(java.sql.Timestamp, Long, Long, Long, Long,
-        Option[Long], Option[Long], Option[Long], Option[Double])]
+    keyedRows[ZoneCandidate](joined, Some(watermark))(
+      col("ts_us"), col("user_id"), col("event_id"), col("la"), col("lo"),
+      col("zone_id"), col("lb"), col("lob"), col("radius_m"))
   }
 
-  /** Nearest qualifying zone over one event's candidate rows — the
-    * bit-stable (hav, zone_id) order via the Scala polynomial forms
-    * (identical to the batch q260 rank); no candidate inside its
-    * radius ⇒ "outside". Shared by S45 and S50. */
-  private def nearestZoneName(pla: Long, plo: Long,
-      cand: Seq[(java.sql.Timestamp, Long, Long, Long, Long,
-        Option[Long], Option[Long], Option[Long], Option[Double])]): String =
-    cand.flatMap { c =>
-      for (zid <- c._6; zla <- c._7; zlo <- c._8; r <- c._9)
-        yield (graft.operators.Geo.havScala(pla, plo, zla, zlo), zid, r)
-    }.filter { case (hv, _, r) => hv <= graft.operators.Geo.kzScala(r) }
-      .sortBy { case (hv, zid, _) => (hv, zid) }
-      .headOption.map(_._2.toString).getOrElse("outside")
+  private type ZoneCandidate = (Long, Long, Long, Long, Long,
+    Option[Long], Option[Long], Option[Long], Option[Double])
 
+  /** Each event's nearest qualifying zone over its candidate rows, as
+    * (ts_us, event_id, zone) in fold order — the bit-stable (hav,
+    * zone_id) order via the Scala polynomial forms (identical to the
+    * batch q260 rank); no candidate inside its radius ⇒ "outside".
+    * Shared by S45 and S50. */
+  private def nearestZones(rows: Iterator[ZoneCandidate]): Seq[(Long, Long, String)] =
+    rows.toSeq.groupBy(r => (r._1, r._3)).toSeq.sortBy(_._1).map {
+      case ((tu, id), cand) =>
+        val (pla, plo) = (cand.head._4, cand.head._5)
+        val zone = cand.flatMap { c =>
+          for (zid <- c._6; zla <- c._7; zlo <- c._8; r <- c._9)
+            yield (graft.operators.Geo.havScala(pla, plo, zla, zlo), zid, r)
+        }.filter { case (hv, _, r) => hv <= graft.operators.Geo.kzScala(r) }
+          .sortBy { case (hv, zid, _) => (hv, zid) }
+          .headOption.map(_._2.toString).getOrElse("outside")
+        (tu, id, zone)
+    }
+
+  /** S45 — ZONE-SCALE streaming geofence transitions: S43 with the
+    * zones as a DATAFRAME routed through the q256 banded grid — the
+    * implemented form of the S43 cutover guidance (a literal zone
+    * list compiles one plan column set per zone; 10³+ geofences need
+    * zones as data). Events explode onto their deduplicated 3×3 grid
+    * neighborhood and LEFT-join the static zone-cell table (a
+    * stream-static join — stateless, so it legally precedes the one
+    * stateful operator); per event, the state function resolves the
+    * NEAREST qualifying zone by the bit-stable (hav, zone_id) order
+    * using [[graft.operators.Geo.havScala]]/kzScala — the identical
+    * float ops as the batch q260 rank — and feeds the S39/S43
+    * transition machine (first event enters from "outside"; zone
+    * names are the zone_id rendered as a string). Unmatched events
+    * keep one null-zone row per exploded key, so "outside" resolution
+    * needs no second join. State: last zone + the order anchor per
+    * user — constant; parity with the batch resolution is pinned in
+    * the golden. */
   def geofenceZoneStream(events: DataFrame, zones: DataFrame,
-      maxRadiusMeters: Double, watermark: String = "10 seconds"): DataFrame = {
-    val s = events.sparkSession
-    import s.implicits._
-    zoneResolvedCandidates(events, zones, maxRadiusMeters, watermark,
+      maxRadiusMeters: Double, watermark: String = "10 seconds"): DataFrame =
+    zoneCandidates(events, zones, maxRadiusMeters, watermark,
         "geofenceZoneStream")
-      .groupByKey(_._2)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long,
-         rows: Iterator[(java.sql.Timestamp, Long, Long, Long, Long,
-           Option[Long], Option[Long], Option[Long], Option[Double])],
-         state: GroupState[GeoState]) =>
-          def micros(ts: java.sql.Timestamp): Long =
-            ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
-          var st = state.getOption.getOrElse(
-            GeoState(Long.MinValue, Long.MinValue, "outside"))
-          val out = rows.toSeq.groupBy(r => (micros(r._1), r._3)).toSeq
-            .sortBy(_._1)
-            .flatMap { case ((tu, id), cand) =>
-              if (tu < st.tsu || (tu == st.tsu && id <= st.eventId)) None
-              else {
-                val zname = nearestZoneName(cand.head._4, cand.head._5, cand)
-                val from = st.zone
-                st = GeoState(tu, id, zname)
-                if (zname != from) Some(GeoTransition(uid, tu, id, from, zname))
-                else None
-              }
-            }
-          state.update(st)
-          out.iterator
-      }.toDF()
-  }
+      .fold(_._2) { (uid, rows, state: GroupState[GeoState]) =>
+        geoTransitions(uid, nearestZones(rows), state, None)
+      }
 
   /** S50 — ZONE-SCALE streaming dwell: S46's visit machine with S45's
     * zones-as-data resolution — the fleet-scale form (10³+ geofences
@@ -2499,56 +2322,12 @@ object StreamOps {
       maxRadiusMeters: Double, watermark: String = "10 seconds",
       idleGapUs: Long = 3600L * 1000000L): DataFrame = {
     require(idleGapUs > 0, s"idleGapUs=$idleGapUs must be positive")
-    val s = events.sparkSession
-    import s.implicits._
-    zoneResolvedCandidates(events, zones, maxRadiusMeters, watermark,
+    zoneCandidates(events, zones, maxRadiusMeters, watermark,
         "dwellZoneStream")
-      .groupByKey(_._2)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long,
-         rows: Iterator[(java.sql.Timestamp, Long, Long, Long, Long,
-           Option[Long], Option[Long], Option[Long], Option[Double])],
-         state: GroupState[DwellState]) =>
-          def micros(ts: java.sql.Timestamp): Long =
-            ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
-          if (state.hasTimedOut) {
-            val st = state.get
-            state.remove()
-            if (st.zone != "outside")
-              Iterator.single(DwellVisit(uid, st.zone, st.enterUs,
-                st.lastUs, st.n))
-            else Iterator.empty
-          } else {
-            var stOpt = state.getOption
-            val out = scala.collection.mutable.ArrayBuffer.empty[DwellVisit]
-            rows.toSeq.groupBy(r => (micros(r._1), r._3)).toSeq
-              .sortBy(_._1)
-              .foreach { case ((tu, id), cand) =>
-                val z = nearestZoneName(cand.head._4, cand.head._5, cand)
-                stOpt match {
-                  case Some(st) if tu < st.lastUs ||
-                      (tu == st.lastUs && id <= st.lastEvent) => () // straggler
-                  case Some(st) if st.zone == z =>
-                    stOpt = Some(st.copy(lastUs = tu, lastEvent = id,
-                      n = st.n + 1))
-                  case Some(st) =>
-                    if (st.zone != "outside")
-                      out += DwellVisit(uid, st.zone, st.enterUs, st.lastUs, st.n)
-                    stOpt = Some(DwellState(z, tu, tu, id, 1L))
-                  case None =>
-                    stOpt = Some(DwellState(z, tu, tu, id, 1L))
-                }
-              }
-            stOpt.foreach { st =>
-              state.update(st)
-              state.setTimeoutTimestamp(math.max(
-                st.lastUs / 1000 + idleGapUs / 1000,
-                state.getCurrentWatermarkMs() + 1))
-            }
-            out.iterator
-          }
-      }.toDF()
+      .fold(_._2, GroupStateTimeout.EventTimeTimeout) {
+        (uid, rows, state: GroupState[DwellState]) =>
+          dwellRuns(uid, nearestZones(rows), state, idleGapUs)
+      }
   }
 
   /** S44 — streaming proximity alerts: LIVE point-vs-point radius
@@ -2579,16 +2358,13 @@ object StreamOps {
     * upstream — the standard at-once watermark contract. */
   def proximityStream(events: DataFrame, radiusMeters: Double,
       watermark: String = "10 seconds"): DataFrame = {
-    val s = events.sparkSession
-    import s.implicits._
     val (h, cells, _) = graft.operators.Geo.gridParams(radiusMeters)
     val k = graft.operators.Geo.havK(radiusMeters)
     val ncMap = map(cells.flatMap { case (b, nc) =>
       Seq(lit(b), lit(nc)) }.toIndexedSeq: _*)
-    events.withWatermark("ts", watermark)
+    val exploded = events
       .select(col("ts"), col("id").cast("long").as("id"),
         col("la").cast("long").as("la"), col("lo").cast("long").as("lo"))
-      .withColumn("tsu", expr("unix_micros(ts)"))
       .withColumn("band", expr(s"(la + 90000000) DIV $h"))
       .withColumn("nc0", element_at(ncMap, col("band")))
       .withColumn("hcell", expr("((lo + 180000000) * nc0) DIV 360000000"))
@@ -2599,14 +2375,12 @@ object StreamOps {
       .withColumn("gcell", explode(array_distinct(
         transform(array(lit(-1L), lit(0L), lit(1L)),
           dc => pmod(col("cellT0") + dc, col("ncT"))))))
-      .select(col("ts"), col("tsu"), col("id"), col("la"), col("lo"),
+    keyedRows[(Long, Long, Long, Long, Long, Long, Long, Long)](
+        exploded, Some(watermark))(
+        col("ts_us"), col("id"), col("la"), col("lo"),
         col("band"), col("hcell"), col("tb"), col("gcell"))
-      .as[(java.sql.Timestamp, Long, Long, Long, Long, Long, Long, Long, Long)]
-      .groupByKey(r => (r._8, r._9))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: (Long, Long),
-         rows: Iterator[(java.sql.Timestamp, Long, Long, Long, Long, Long, Long, Long, Long)],
-         state: GroupState[ProxState]) =>
+      .fold(r => (r._7, r._8), GroupStateTimeout.EventTimeTimeout) {
+        (key, rows, state: GroupState[ProxState]) =>
           val wmUs = state.getCurrentWatermarkMs() * 1000L
           val prev = state.getOption.getOrElse(ProxState(Array.empty,
             Array.empty, Array.empty, Array.empty, Array.empty, Array.empty))
@@ -2619,8 +2393,8 @@ object StreamOps {
           }
           val out = scala.collection.mutable.ArrayBuffer.empty[ProximityPair]
           // deterministic intra-batch order: (ts, id)
-          rows.toArray.sortBy(r => (r._2, r._3)).foreach { n =>
-            val nRec = (n._3, n._2, n._4, n._5, n._6, n._7)
+          rows.toArray.sortBy(r => (r._1, r._2)).foreach { n =>
+            val nRec = (n._2, n._1, n._3, n._4, n._5, n._6)
             cur.foreach { st =>
               if (st._1 != nRec._1) {
                 // orient to (smaller id = a); emit only in a's home key
@@ -2640,11 +2414,10 @@ object StreamOps {
             state.update(ProxState(cur.map(_._1).toArray, cur.map(_._2).toArray,
               cur.map(_._3).toArray, cur.map(_._4).toArray,
               cur.map(_._5).toArray, cur.map(_._6).toArray))
-            state.setTimeoutTimestamp(math.max(cur.map(_._2).min / 1000L + 1L,
-              state.getCurrentWatermarkMs() + 1L))
+            armTimeout(state, cur.map(_._2).min / 1000L + 1L)
           }
           out.iterator
-      }.toDF()
+      }
   }
 
   /** S41 — streaming quality-classifier scoring: the SERVING half of
@@ -2796,14 +2569,8 @@ object StreamOps {
     * operator (exact once-per-id dedup is S12's job, composable
     * upstream). */
   def quotaFillStream(docs: DataFrame, quotas: Map[String, Long]): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    docs.select(col("source"), col("doc_id").cast("long"))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (src: String, rows: Iterator[(String, Long)],
-         state: GroupState[QuotaCount]) =>
+    keyedRows[(String, Long)](docs, None)(col("source"), col("doc_id").cast("long"))
+      .fold(_._1) { (src, rows, state: GroupState[QuotaCount]) =>
           val quota = quotas.getOrElse(src, 0L)
           var n = state.getOption.map(_.n).getOrElse(0L)
           val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]

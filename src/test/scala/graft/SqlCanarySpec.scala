@@ -92,8 +92,8 @@ class SqlCanarySpec extends SparkSpec {
     * string past Q26 that is dual-dialect runs through `spark.sql`
     * continuously; the rest are asserted to remain genuinely
     * DuckDB-only (the rot tripwire: a Spark upgrade that makes one
-    * parse demands its promotion into the covered set). Discovered by
-    * an exhaustive probe (graft.CanaryProbe): 95 of 240 oracle strings
+    * parse demands its promotion into the covered set). An r15
+    * exhaustive run of every oracle string found 95 of 240
     * are dual-dialect TODAY with ZERO value mismatches; the 145
     * others fail on DuckDB-only surface — list_sum/list/epoch/len/
     * string_split(_regex)/string_agg/UNNEST-range/QUALIFY/VALUES-

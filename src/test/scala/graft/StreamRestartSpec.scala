@@ -1,9 +1,9 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Encoder}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.streaming.StreamOps
+import graft.streaming._
 
 /** Kill/restart goldens for the stateful geo stream machines
   * (S44–S50) — r17 verdict item 3. S8 pins checkpoint recovery for
@@ -116,6 +116,64 @@ class StreamRestartSpec extends SparkSpec {
       s"$name: vacuous control fixture (${control.size} rows)")
     assert(restarted == control, s"$name: lost=${(control -- restarted).take(3)} " +
       s"dup/extra=${(restarted -- control).take(3)}")
+  }
+
+  test("state classes keep the checkpoint schemas every stateful machine restores from") {
+    // A stateful machine stores its state under the state class's
+    // encoder schema, so a changed schema cannot restore a checkpoint
+    // written before the change. These strings were generated from the
+    // classes as they shipped; a new state shape is a new class.
+    val drift = Seq[(Encoder[_], String)](
+      Encoders.product[UserSessionState] ->
+        "nEvents BIGINT NOT NULL,startMs BIGINT NOT NULL,lastMs BIGINT NOT NULL",
+      Encoders.product[FunnelProgress] ->
+        "times ARRAY<BIGINT>",
+      Encoders.product[MomentState] ->
+        "n BIGINT NOT NULL,s DOUBLE NOT NULL,q DOUBLE NOT NULL",
+      Encoders.product[MgState] ->
+        "ids ARRAY<BIGINT>,counts ARRAY<BIGINT>,n BIGINT NOT NULL",
+      Encoders.product[TrendState] ->
+        "n BIGINT NOT NULL,x0 BIGINT NOT NULL,sx DOUBLE NOT NULL,sy DOUBLE NOT NULL,sxx DOUBLE NOT NULL,syy DOUBLE NOT NULL,sxy DOUBLE NOT NULL",
+      Encoders.product[TransitionAnchor] ->
+        "tsu BIGINT NOT NULL,eventId BIGINT NOT NULL,eventType STRING",
+      Encoders.product[TouchAnchor] ->
+        "tsu BIGINT NOT NULL,eventId BIGINT NOT NULL,channel STRING",
+      Encoders.product[RetentionState] ->
+        "cohortDay INT NOT NULL,floorDay INT NOT NULL,recent ARRAY<INT>",
+      Encoders.product[ConvState] ->
+        "t0 BIGINT NOT NULL,converted BOOLEAN NOT NULL",
+      Encoders.product[SkipRing] ->
+        "tsus ARRAY<BIGINT>,eids ARRAY<BIGINT>,types ARRAY<STRING>",
+      Encoders.product[HbState] ->
+        "lastUs BIGINT NOT NULL,n BIGINT NOT NULL",
+      Encoders.product[EwmaState] ->
+        "tsu BIGINT NOT NULL,eventId BIGINT NOT NULL,level DOUBLE NOT NULL",
+      Encoders.product[CusumState] ->
+        "tsu BIGINT NOT NULL,eventId BIGINT NOT NULL,sPos DOUBLE NOT NULL,sNeg DOUBLE NOT NULL",
+      Encoders.product[ReservoirState] ->
+        "ids ARRAY<BIGINT>,hashes ARRAY<BIGINT>,n BIGINT NOT NULL",
+      Encoders.product[CdcState] ->
+        "version BIGINT NOT NULL,opRank INT NOT NULL,op STRING,payload STRING,tsUs BIGINT NOT NULL",
+      Encoders.product[SpeedState] ->
+        "tsu BIGINT NOT NULL,eid BIGINT NOT NULL,la BIGINT NOT NULL,lo BIGINT NOT NULL",
+      Encoders.product[ResampleState] ->
+        "tu BIGINT NOT NULL,eid BIGINT NOT NULL,las BIGINT NOT NULL,los BIGINT NOT NULL,lastGrid BIGINT NOT NULL",
+      Encoders.product[BurstState] ->
+        "lastClosed BIGINT NOT NULL,warm BIGINT NOT NULL,ewmaQ BIGINT NOT NULL,lastSeenUs BIGINT NOT NULL,ws ARRAY<BIGINT>,ns ARRAY<BIGINT>",
+      Encoders.product[DwellState] ->
+        "zone STRING,enterUs BIGINT NOT NULL,lastUs BIGINT NOT NULL,lastEvent BIGINT NOT NULL,n BIGINT NOT NULL",
+      Encoders.product[GeoState] ->
+        "tsu BIGINT NOT NULL,eventId BIGINT NOT NULL,zone STRING",
+      Encoders.product[IntervalState] ->
+        "bs ARRAY<BIGINT>,be ARRAY<BIGINT>,n ARRAY<BIGINT>,raw ARRAY<BIGINT>,closedUntil BIGINT NOT NULL",
+      Encoders.product[ProxState] ->
+        "ids ARRAY<BIGINT>,tsUs ARRAY<BIGINT>,las ARRAY<BIGINT>,los ARRAY<BIGINT>,hb ARRAY<BIGINT>,hc ARRAY<BIGINT>",
+      Encoders.product[QuotaCount] ->
+        "n BIGINT NOT NULL"
+    ).collect { case (enc, ddl) if enc.schema.toDDL != ddl =>
+      s"${enc.clsTag.runtimeClass.getSimpleName}: ${enc.schema.toDDL} != $ddl"
+    }
+    assert(drift.isEmpty, drift.mkString("\n"))
   }
 
   test("S14 restart: funnel step-completion state survives a kill mid-funnel") {

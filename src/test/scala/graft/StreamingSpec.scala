@@ -842,12 +842,22 @@ class StreamingSpec extends SparkSpec {
       ev(base + 10, "a", 2, v = 20.0))
     q.processAllAvailable()
     // batch 2: one in-order point (level 0.5·40 + 0.5·22.5 = 31.25) and
-    // one REGRESSION behind the anchor → dropped, level untouched
-    in.addData(ev(base + 30, "a", 4, v = 40.0), ev(base + 5, "a", 9, v = 999.0))
+    // one REGRESSION behind the anchor → dropped, level untouched; then
+    // two points in the SAME millisecond whose µs order is the reverse
+    // of their event_id order: µs order folds id 6 (.500001 s, v 50)
+    // first → 0.5·50 + 0.5·31.25 = 40.625, then id 5 (.500002 s, v 60)
+    // → 0.5·60 + 0.5·40.625 = 50.3125 (an ms fold would take id 5 first)
+    def atMicros(sec: Long, us: Int) = {
+      val t = new Timestamp(sec * 1000); t.setNanos(us * 1000); t
+    }
+    in.addData(ev(base + 30, "a", 4, v = 40.0), ev(base + 5, "a", 9, v = 999.0),
+      ev(base + 40, "a", 5, v = 60.0).copy(ts = atMicros(base + 40, 500002)),
+      ev(base + 40, "a", 6, v = 50.0).copy(ts = atMicros(base + 40, 500001)))
     q.processAllAvailable(); q.stop()
     val got = spark.table("s35").collect()
       .map(r => r.getAs[Long]("event_id") -> r.getAs[Double]("ewma")).toMap
-    assert(got == Map(1L -> 10.0, 2L -> 15.0, 3L -> 22.5, 4L -> 31.25),
+    assert(got == Map(1L -> 10.0, 2L -> 15.0, 3L -> 22.5, 4L -> 31.25,
+      6L -> 40.625, 5L -> 50.3125),
       s"got $got")
   }
 
